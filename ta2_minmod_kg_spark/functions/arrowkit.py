@@ -43,23 +43,19 @@ import pandas as pd
 DEFAULT_CHUNK_ROWS = 2048
 
 
-def chunked_kernel(
-    per_chunk: Callable[[pd.DataFrame], pd.DataFrame | None],
-    max_rows: int = DEFAULT_CHUNK_ROWS,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Wrap a per-chunk function into a ``mapInPandas`` generator.
+def _chunked(per_chunk, max_rows: int, slice_):
+    """The one chunk/paused-GC loop behind both wrappers.
 
-    ``per_chunk(pdf)`` receives a DataFrame slice of at most ``max_rows``
-    rows (positionally indexed like the parent batch — use ``.iloc`` /
-    column ``zip`` iteration, not ``.loc``) and returns the output frame
-    for that slice (or None/empty to emit nothing).
+    ``slice_(batch, start, n)`` cuts at most ``n`` rows from ``start``;
+    ``len()`` is the row count of a pandas DataFrame and of a pyarrow
+    RecordBatch alike.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def gen(batches):
+        for batch in batches:
+            n = len(batch)
             for start in range(0, n, max_rows):
-                chunk = pdf.iloc[start : start + max_rows] if n > max_rows else pdf
+                chunk = slice_(batch, start, max_rows) if n > max_rows else batch
                 was_enabled = gc.isenabled()
                 gc.disable()
                 try:
@@ -71,6 +67,22 @@ def chunked_kernel(
                     yield out
 
     return gen
+
+
+def chunked_kernel(
+    per_chunk: Callable[[pd.DataFrame], pd.DataFrame | None],
+    max_rows: int = DEFAULT_CHUNK_ROWS,
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """Wrap a per-chunk function into a ``mapInPandas`` generator.
+
+    ``per_chunk(pdf)`` receives a DataFrame slice of at most ``max_rows``
+    rows (positionally indexed like the parent batch — use ``.iloc`` /
+    column ``zip`` iteration, not ``.loc``) and returns the output frame
+    for that slice (or None/empty to emit nothing).
+    """
+    return _chunked(
+        per_chunk, max_rows, lambda pdf, start, n: pdf.iloc[start : start + n]
+    )
 
 
 def chunked_arrow_kernel(
@@ -89,20 +101,4 @@ def chunked_arrow_kernel(
     wire format, so there is nothing pandas adds but overhead (guide
     §4.2).
     """
-
-    def gen(batches):
-        for rb in batches:
-            n = rb.num_rows
-            for start in range(0, n, max_rows):
-                chunk = rb.slice(start, max_rows) if n > max_rows else rb
-                was_enabled = gc.isenabled()
-                gc.disable()
-                try:
-                    out = per_chunk(chunk)
-                finally:
-                    if was_enabled:
-                        gc.enable()
-                if out is not None and out.num_rows:
-                    yield out
-
-    return gen
+    return _chunked(per_chunk, max_rows, lambda rb, start, n: rb.slice(start, n))

@@ -23,19 +23,6 @@ def token_count(text: Column) -> Column:
     return F.size(F.split(F.trim(text), r"\s+"))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish subword proxy: count word-piece boundaries via a regex that
-    splits on non-alphanumerics and every ~4 chars of long words — a cheap
-    deterministic stand-in for a real tokenizer, good enough for
-    length-budget filtering at corpus scale."""
-    words = F.split(F.lower(text), r"[^a-z0-9]+")
-    return F.aggregate(
-        words,
-        F.lit(0),
-        lambda acc, w: acc + F.ceil(F.length(w) / F.lit(4.0)).cast("int"),
-    )
-
-
 def _stop_ratio(text: Column, stopwords: list[str]) -> Column:
     words = F.split(F.lower(text), r"[^a-zà-ÿ]+")
     n = F.size(words)

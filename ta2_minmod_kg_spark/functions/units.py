@@ -9,15 +9,11 @@ Clean-room port of the conversion semantics at
   inventory is silently skipped by the model), anything unknown is a hard
   ``NotImplementedError`` (data bug — surfaced, not swallowed).
 
-Both a scalar form (used inside Arrow batches by the grade-tonnage
-``applyInPandas``) and a Spark Column form (``when``/``otherwise`` chain,
-JVM-side, used when a whole-column normalization is enough).
+The conversions are scalar functions, called per value inside the
+grade-tonnage Arrow kernels.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 MR = "https://minmod.isi.edu/resource/"
 
@@ -106,29 +102,3 @@ def unit_conversion(value: float, unit: str, to_unit: str) -> float:
             raise UnconvertibleUnitError((value, unit, to_unit))
         raise NotImplementedError((value, unit, to_unit))
     raise NotImplementedError((value, unit, to_unit))
-
-
-def _ops_col(value: Column, unit: Column, table: dict[str, tuple]) -> Column:
-    expr = F.lit(None).cast("double")
-    for u, (kind, factors) in table.items():
-        conv = value
-        for f in factors:
-            conv = conv * F.lit(f) if kind == "mul" else conv / F.lit(f)
-        expr = F.when(unit == F.lit(u), conv).otherwise(expr)
-    return expr
-
-
-def tonnage_mt_col(value: Column, unit: Column) -> Column:
-    """value → Mt (same division chains as the scalar form, bit-exact to
-    the reference); NULL when the unit is not tonnage-convertible.
-
-    JVM-side (whole-stage codegen) — use this for bulk normalization where
-    the skip-on-unconvertible semantics of the model is expressed as a
-    NULL filter instead of an exception.
-    """
-    return _ops_col(value, unit, TO_MT_OPS)
-
-
-def grade_pct_col(value: Column, unit: Column) -> Column:
-    """value → percent; NULL when not grade-convertible."""
-    return _ops_col(value, unit, TO_PERCENT_OPS)

@@ -160,7 +160,7 @@ def _merge_geology(ranked: list[dict]) -> Optional[dict]:
         for sid, g in geos:
             v = g.get(field)
             if v is not None:
-                out[field] = {"value": v, "refid": sid}
+                out[field] = _ref(v, sid)
                 break
     for rock in ("host_rock", "associated_rock"):
         sub = {}
@@ -168,7 +168,7 @@ def _merge_geology(ranked: list[dict]) -> Optional[dict]:
             for sid, g in geos:
                 v = (g.get(rock) or {}).get(field)
                 if v is not None:
-                    sub[field] = {"value": v, "refid": sid}
+                    sub[field] = _ref(v, sid)
                     break
         if sub:
             out[rock] = sub
@@ -515,7 +515,7 @@ def select_dedup_inventories(
     return grouped.mapInPandas(_select_inv_batch_fn, schema=DEDUP_INV_SCHEMA)
 
 
-# -- mega-group (skew) path ----------------------------------------------------
+# -- mega-group SQL merge (full DEDUP_ATTRS_SCHEMA, exact kernel parity) -------
 
 
 def _rank_key_col():
@@ -530,87 +530,6 @@ def _rank_key_col():
         F.col("site_id").alias("k5"),
     )
 
-
-def merge_dedup_sites_wide(sites_with_dedup: DataFrame) -> DataFrame:
-    """A3 as pure column expressions — the skew fallback for groups too
-    large for a single collect_list task (SURVEY §7 "salting ... behind a
-    flag"; the sorted-struct min_by trick).
-
-    Per field: ``max_by(struct(value, refid), rank_key)`` over the rows
-    where the field is non-null — Catalyst partial-aggregates map-side, so
-    a mega-group never assembles on one executor.  Covers the scalar/list
-    attributes + top1 deposit type + modified_at; geology and the full
-    ranked lists keep the kernel path (they are per-subfield nested merges
-    whose output is small regardless of group size).
-    """
-    narrow = with_site_score(sites_with_dedup)
-    key = _rank_key_col()
-
-    def first_non_null(col, extra_cond=None):
-        cond = col.isNotNull()
-        if extra_cond is not None:
-            cond = cond & extra_cond
-        k = F.when(cond, key)
-        return F.max_by(
-            F.when(cond, F.struct(col.alias("value"), F.col("site_id").alias("refid"))),
-            k,
-        )
-
-    nonempty = lambda c: F.size(F.coalesce(c, F.array())) > 0
-
-    agg = narrow.groupBy("dedup_site_id").agg(
-        first_non_null(F.col("name")).alias("name"),
-        first_non_null(F.col("type")).alias("type"),
-        first_non_null(F.col("rank")).alias("rank"),
-        first_non_null(F.col("discovered_year")).alias("discovered_year"),
-        F.max_by(
-            F.when(
-                F.col("lat").isNotNull() & F.col("lon").isNotNull(),
-                F.struct("lat", "lon", F.col("site_id").alias("refid")),
-            ),
-            F.when(F.col("lat").isNotNull() & F.col("lon").isNotNull(), key),
-        ).alias("coordinates"),
-        first_non_null(F.col("country"), nonempty(F.col("country"))).alias("country"),
-        first_non_null(
-            F.col("state_or_province"), nonempty(F.col("state_or_province"))
-        ).alias("state_or_province"),
-        first_non_null(
-            F.col("mineral_form"), nonempty(F.col("mineral_form"))
-        ).alias("mineral_form"),
-        F.max("modified_at").alias("modified_at"),
-        F.count(F.lit(1)).alias("n_sites"),
-    )
-
-    # top-1 deposit type: explode candidates, dedup per (group, dt) keeping
-    # max (confidence, rank key), then max over the group (A4 as SQL)
-    from ..functions.ids import MR_NS
-
-    dts = (
-        narrow.select(
-            "dedup_site_id",
-            "site_id",
-            key.alias("rk"),
-            F.explode_outer("deposit_type_candidates").alias("dt"),
-        )
-        .filter(F.col("dt.normalized_uri").isNotNull())
-        .select(
-            "dedup_site_id",
-            F.replace(F.col("dt.normalized_uri"), F.lit(MR_NS), F.lit("")).alias(
-                "dt_id"
-            ),
-            F.struct(F.col("dt.confidence").alias("c"), F.col("rk").alias("rk")).alias(
-                "conf_key"
-            ),
-        )
-        .groupBy("dedup_site_id", "dt_id")
-        .agg(F.max("conf_key").alias("best"))
-        .groupBy("dedup_site_id")
-        .agg(F.max_by(F.col("dt_id"), F.col("best")).alias("top1_deposit_type"))
-    )
-    return agg.join(dts, "dedup_site_id", "left")
-
-
-# -- mega-group SQL merge (full DEDUP_ATTRS_SCHEMA, exact kernel parity) -------
 
 _GEO_SCALARS = (
     "alteration",

@@ -5,12 +5,13 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
 - ``with_lineage``      — per-row ``sha256(content)`` (JVM ``sha2``), the
                           invariant carried through every downstream table.
 - ``parse_sites``       — ``from_json`` with the declared schema (JVM parse,
-                          no inference); structural violations split off.
+                          no inference).
+- ``split_violations``  — filename, structural and constrained-type rules;
+                          violating documents split off with a reason.
 - ``normalize_sites``   — the relational site row (ref
-                          `kgrel/mineral_site.py:198-244`): broadcast joins
-                          for source score, JVM column exprs for the
-                          location view ids, one Arrow-vectorized UDF for
-                          site-id minting and WKT centroids.
+                          `kgrel/mineral_site.py:198-244`) in one Arrow
+                          pass: site-id minting, WKT centroids, and the
+                          source-score / crs lookups as driver dicts.
 - ``extract_triples``   — ``mapInPandas`` fan-out of each record into its
                           (subj, pred, obj) rows.
 - ``explode_inventories`` — per-inventory rows feeding the grade-tonnage
@@ -27,23 +28,30 @@ from __future__ import annotations
 import json
 import math
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
-from ..functions.rdf import site_to_triples
-from ..schemas import INGEST, RAW_SITE, TRIPLE
+from ..functions.rdf import parse_modified_at_ns, site_to_triples
+from ..schemas import RAW_SITE, SITE_REL, TRIPLE
 
-# ---------------------------------------------------------------------------
+# Filename charset rule: the WHOLE path must consist of these characters.
+# One class, two full-match forms: Java's ``$`` also matches before a
+# trailing line terminator (``\r``, ``\u2028``, ``\r\n``) and Python's
+# before a trailing ``\n``, so both sides anchor explicitly.
+_PATH_CHARS = r"[a-zA-Z0-9_\-,./]+"
+_PATH_OK_JVM = "^" + _PATH_CHARS + r"\z"  # rlike: java.util.regex find()
+_PATH_OK_RE = re.compile(_PATH_CHARS)  # used with .fullmatch
 
 
-def read_ingest(spark, path: str) -> DataFrame:
-    return spark.read.schema(INGEST).parquet(path)
+def path_ok(path: str | None) -> bool:
+    """Python form of the filename rule; a NULL path passes (the JVM
+    ``rlike`` on NULL is NULL, which ``split_violations`` treats as ok)."""
+    return path is None or _PATH_OK_RE.fullmatch(path) is not None
 
 
 def with_lineage(ingest: DataFrame) -> DataFrame:
@@ -61,15 +69,12 @@ def parse_sites(ingest: DataFrame) -> DataFrame:
     )
 
 
-def split_violations(
-    parsed: DataFrame, constrained: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """P5/P6 validation.
+def split_violations(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """P5/P6 validation: ``(ok, bad)`` sides of ``parse_sites`` output.
 
-    Structural rules as JVM column predicates: required idents present,
-    exactly one site-level reference (ref validators.py:44-54), filename
-    charset rule on ``path``.  With ``constrained=True`` (the default and
-    the reference-parity behavior) the raw JSON additionally passes the
+    A document is ok when its ``path`` passes the filename charset rule
+    and its raw JSON passes the structural rules (required idents present,
+    exactly one site-level reference, ref validators.py:44-54) and the
     reference's constrained-type tree (CleanedNotEmptyStr,
     confidence ∈ [0,1], URL-valid IRIs, numeric measures —
     operators/constrained.py, oracle-tested against the reference's
@@ -78,32 +83,15 @@ def split_violations(
     """
     from .constrained import site_error_udf
 
-    path_ok = F.col("path").rlike(r"^[a-zA-Z0-9_\-,./]+$")
-    if not constrained:
-        # structural-only mode keeps the JVM predicate chain (it needs the
-        # parsed ``site`` struct; used by tests and ad-hoc callers only)
-        struct_ok = (
-            F.col("site.source_id").isNotNull()
-            & F.col("site.record_id").isNotNull()
-            & F.col("site.created_by").isNotNull()
-            & (F.size(F.coalesce(F.col("site.reference"), F.array())) == 1)
-            & path_ok
-        )
-        return (
-            parsed.filter(struct_ok),
-            parsed.filter(~struct_ok).withColumn(
-                "violation_reason", F.lit("structural")
-            ),
-        )
-    # Default path: structural + constrained rules fused into ONE Arrow
-    # kernel parse (operators/constrained.py _structural_then_constrained).
-    # No ``site.*`` access ⇒ Catalyst prunes ``from_json`` out of the plan
-    # entirely — the former predicate chain lexed the full document 4-5
-    # times per row (one pruned ``from_json`` per field access, verified
-    # with .explain), pure JVM cost this removes from the hot path.
+    # Structural + constrained rules fused into ONE Arrow kernel parse
+    # (operators/constrained.py _structural_then_constrained).  Keep
+    # ``site.*`` out of this plan: each field access adds one pruned
+    # ``from_json`` that lexes the whole document again (4-5 per row for
+    # the structural fields, verified with .explain); with none, Catalyst
+    # prunes ``from_json`` out entirely.
     tagged = parsed.withColumn(
         "violation_reason",
-        F.when(~path_ok, F.lit("structural")).otherwise(
+        F.when(~F.col("path").rlike(_PATH_OK_JVM), F.lit("structural")).otherwise(
             site_error_udf(F.col("content"))
         ),
     )
@@ -125,23 +113,6 @@ def split_violations(
 # -- Arrow-vectorized kernels -------------------------------------------------
 
 
-from pyspark.sql.types import (  # noqa: E402  (DataType objects: no active-session DDL parse at import)
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-
-@pandas_udf(StringType())
-def site_id_udf(created_by: pd.Series, source_id: pd.Series, record_id: pd.Series) -> pd.Series:
-    out = [
-        make_site_id(get_username(cb), sid, str(rid))
-        for cb, sid, rid in zip(created_by, source_id, record_id)
-    ]
-    return pd.Series(out, dtype="object")
-
-
 _POINT_RE = re.compile(
     r"^\s*POINT\s*\(\s*([-+0-9.eEnana]+)\s+([-+0-9.eEnan]+)\s*\)\s*$", re.I
 )
@@ -152,18 +123,6 @@ try:  # full WKT support when shapely/pyproj are present (not in this sandbox)
     _HAVE_SHAPELY = True
 except Exception:
     _HAVE_SHAPELY = False
-
-
-_WGS84_R = 6378137.0  # spherical web-mercator radius (EPSG:3857)
-
-
-def _merc_inverse(x: float, y: float) -> tuple[float, float]:
-    """EPSG:3857 → EPSG:4326, pure math (spherical mercator inverse —
-    the same transform pyproj applies for 3857; ref misc/geo.py:67-96
-    routes through pyproj.Transformer)."""
-    lon = math.degrees(x / _WGS84_R)
-    lat = math.degrees(math.atan(math.sinh(y / _WGS84_R)))
-    return lat, lon
 
 
 def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, float | None]:
@@ -210,37 +169,6 @@ def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, 
     return None, None
 
 
-@pandas_udf(
-    StructType(
-        [StructField("lat", DoubleType()), StructField("lon", DoubleType())]
-    )
-)
-def centroid_udf(wkt: pd.Series, crs_name: pd.Series) -> pd.DataFrame:
-    lats, lons = [], []
-    for w, c in zip(wkt, crs_name):
-        lat, lon = _wkt_centroid(w, c)
-        lats.append(lat)
-        lons.append(lon)
-    return pd.DataFrame({"lat": lats, "lon": lons})
-
-
-# ---------------------------------------------------------------------------
-
-
-def _norm_ids(entities_col: str):
-    """array<candidate_entity> → array<internal id> of linked entities
-    (ref location.py:151-161) — pure column expr, JVM-side."""
-    return F.transform(
-        F.filter(
-            F.coalesce(F.col(entities_col), F.array()),
-            lambda x: x["normalized_uri"].isNotNull(),
-        ),
-        lambda x: F.replace(x["normalized_uri"], F.lit(MR_NS), F.lit("")),
-    )
-
-
-from ..schemas import SITE_REL  # noqa: E402
-
 SITE_REL_COLS = [f.name for f in SITE_REL.fields]
 
 
@@ -249,7 +177,7 @@ def _normalize_batch_fn(
 ):
     """Single-parse normalization kernel (P2+P3 in one Arrow pass).
 
-    One ``json.loads`` per row builds every SITE_REL column.  The
+    One ``json.loads`` per row builds every SITE_REL column.  A
     column-expression formulation pays N partial JSON parses per row
     (Catalyst inlines ``from_json`` into each projected field — 9 parses in
     the measured plan, ~2 ms/row); this kernel is one parse (~0.2 ms/row).
@@ -266,16 +194,8 @@ def _normalize_batch_fn(
     dicts — the row-dict construction plus pandas' per-record inference
     was ~40% of the kernel's CPU at 2k-row chunks.
     """
-    from datetime import datetime
-
     if validate:
         from .constrained import structural_then_constrained_parsed
-
-    def parse_ns(s: str) -> int:
-        if s.endswith("Z"):
-            s = s[:-1] + "+00:00"
-        # same float path as the reference (misc/utils.py:166-171)
-        return int(datetime.fromisoformat(s).timestamp() * 1e9)
 
     def norm_ids(entities):
         return [
@@ -320,7 +240,7 @@ def _normalize_batch_fn(
             pdf["repo"], pdf["path"], pdf["content_sha256"], pdf["content"]
         ):
             if validate:
-                if path is not None and not _PATH_OK_RE.match(str(path)):
+                if not path_ok(path):
                     continue
                 err, site = structural_then_constrained_parsed(content)
                 if err is not None:
@@ -361,7 +281,7 @@ def _normalize_batch_fn(
             ap_geology(site.get("geology_info"))
             ap_discovered(site.get("discovered_year"))
             ap_created_by(site["created_by"])
-            ap_modified(parse_ns(site["modified_at"]))
+            ap_modified(parse_modified_at_ns(site["modified_at"]))
             ap_sha(sha)
             ap_repo(repo)
             ap_path(path)
@@ -383,7 +303,8 @@ def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame
     ``_prevalidated_source`` marker), the kernel runs over the UNFILTERED
     source and performs the validation itself — same rows out, one python
     pass and one parse instead of two (guide §4: cross the boundary once,
-    do everything per batch).
+    do everything per batch).  Any other input is normalized row by row
+    as given, so every row must already be a valid document.
     """
     crs_names = {
         MR_NS + r["minmod_id"]: r["name"] for r in vocab["crs"].collect()
@@ -403,92 +324,13 @@ def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame
     )
 
 
-def normalize_sites_colexpr(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """Column-expression formulation kept for reference/AB tests.
-
-    Broadcast joins: data_source → source_score, crs → crs name.
-    One Arrow UDF for site-id minting, one for centroids; everything else
-    whole-stage-codegen column exprs.  NOTE: Catalyst inlines the
-    ``from_json`` into every projected field — use ``normalize_sites``.
-    """
-    src_scores = F.broadcast(
-        vocab["data_source"].select(
-            F.col("uri").alias("source_id"), F.col("score").alias("source_score")
-        )
-    )
-    crs_names = F.broadcast(
-        vocab["crs"].select(
-            F.concat(F.lit(MR_NS), F.col("minmod_id")).alias("crs_uri"),
-            F.col("name").alias("crs_name"),
-        )
-    )
-
-    df = (
-        parsed.select(
-            "repo",
-            "path",
-            "content_sha256",
-            F.col("site.*"),
-        )
-        .withColumn(
-            "site_id", site_id_udf(F.col("created_by"), F.col("source_id"), F.col("record_id"))
-        )
-        .withColumn(
-            "modified_at_ns",
-            (F.unix_micros(F.to_timestamp(F.col("modified_at")))) * F.lit(1000),
-        )
-    )
-
-    df = df.join(src_scores, "source_id", "left")
-    df = df.join(
-        crs_names,
-        F.col("location_info.crs.normalized_uri") == crs_names["crs_uri"],
-        "left",
-    )
-
-    centroid = centroid_udf(F.col("location_info.location"), F.col("crs_name"))
-    df = df.withColumn("centroid", centroid)
-
-    return df.select(
-        "site_id",
-        F.lit(None).cast("string").alias("dedup_site_id"),
-        "source_id",
-        "source_score",
-        F.col("record_id").cast("string").alias("record_id"),
-        "name",
-        "aliases",
-        F.col("site_rank").alias("rank"),
-        F.col("site_type").alias("type"),
-        F.col("location_info.location").alias("location_wkt"),
-        F.col("location_info.crs").alias("location_crs"),
-        F.col("centroid.lat").alias("lat"),
-        F.col("centroid.lon").alias("lon"),
-        _norm_ids("location_info.country").alias("country"),
-        _norm_ids("location_info.state_or_province").alias("state_or_province"),
-        F.col("deposit_type_candidate").alias("deposit_type_candidates"),
-        F.col("mineral_inventory").alias("inventories"),
-        "reference",
-        "mineral_form",
-        "geology_info",
-        "discovered_year",
-        "created_by",
-        F.col("modified_at_ns").alias("modified_at"),
-        "content_sha256",
-        "repo",
-        "path",
-    )
-
-
 # -- triple fan-out -----------------------------------------------------------
 
 
-_PATH_OK_RE = re.compile(r"^[a-zA-Z0-9_\-,./]+$")
-
-
 def _site_structurally_valid(site, path: str | None) -> bool:
-    """Python mirror of ``split_violations``' predicates — records routed to
-    the violations table must produce NO triples (and must never crash the
-    fan-out kernel at scale)."""
+    """The structural and filename rules of ``split_violations`` — records
+    routed to the violations table for them must produce NO triples (and
+    must never crash the fan-out kernel at scale)."""
     if not isinstance(site, dict):
         return False
     if site.get("source_id") is None or site.get("record_id") is None:
@@ -497,7 +339,7 @@ def _site_structurally_valid(site, path: str | None) -> bool:
         return False
     if len(site.get("reference") or []) != 1:
         return False
-    if path is not None and not _PATH_OK_RE.match(path):
+    if not path_ok(path):
         return False
     return True
 
@@ -563,8 +405,6 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
     if "path" in ingest.columns:
         cols.append("path")  # enables the filename-charset validity rule
     if carry:
-        from pyspark.sql.types import IntegerType, StructType
-
         schema = StructType(
             TRIPLE.fields + [StructField("bucket", IntegerType())]
         )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MR_NS = "https://minmod.isi.edu/resource/"
+from ..functions.ids import MR_NS
 
 # (field label used by the reference's error messages, vocab table, id col)
 _FIELD_VOCAB = [

@@ -43,22 +43,30 @@ CODE_VERSION = "v3"  # r3: projected-CRS corpus slices + window-free mega merge
 N_BUCKETS_DEFAULT = 256
 
 
-def _clear_partitions(
-    spark: SparkSession, out_path: str, buckets: list[int]
+def _write_partitioned(
+    spark: SparkSession, df: DataFrame, out_path: str, buckets: list[int] | None
 ) -> None:
-    """Delete ``bucket=<b>`` partition directories ahead of a dynamic
-    partition overwrite, so dirty buckets that emit no rows don't leave
-    stale data behind.  Routed through the Hadoop FileSystem API so it
-    works on ANY workdir scheme (HDFS, object stores) — a local
-    shutil.rmtree would silently no-op there and resurrect the stale
-    partitions this helper exists to remove."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(os.path.join(out_path, f"bucket={b}"))
-        fs = p.getFileSystem(hconf)
-        if fs.exists(p):
-            fs.delete(p, True)
+    """Write ``df`` partitioned by ``bucket``: the whole table when
+    ``buckets`` is None, else only those partitions.
+
+    Dynamic overwrite only touches partitions the new rows emit, so a
+    dirty bucket that now produces ZERO rows (all its files deleted) would
+    keep its stale partition: every dirty ``bucket=<b>`` directory is
+    deleted first, and the write rebuilds the non-empty ones.  Deletion
+    goes through the Hadoop FileSystem API so it works on ANY workdir
+    scheme (HDFS, object stores) — a local shutil.rmtree would silently
+    no-op there and resurrect the stale partitions."""
+    writer = df.write.mode("overwrite").partitionBy("bucket")
+    if buckets is not None:
+        jvm = spark._jvm
+        hconf = spark._jsc.hadoopConfiguration()
+        for b in buckets:
+            p = jvm.org.apache.hadoop.fs.Path(os.path.join(out_path, f"bucket={b}"))
+            fs = p.getFileSystem(hconf)
+            if fs.exists(p):
+                fs.delete(p, True)
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.parquet(out_path)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -187,18 +195,21 @@ class KGPipeline:
         stage: str,
         build,
         input_fingerprint: str | None,
-        bucket_col: str | None = "bucket",
-        partition_by: str | None = None,
+        partitioned: bool = False,
         changed_buckets: list[int] | None = None,
     ) -> DataFrame:
         """Run, skip, or *incrementally* recompute a stage.
 
+        A ``partitioned`` stage is built as ``build(buckets)``, written
+        partitioned by ``bucket`` and hashed per bucket; any other stage is
+        built as ``build()`` and hashed as one logical partition.
+
         Incremental path (the Spark analog of the reference's per-file
-        sqlite memo): when the stage is bucket-partitioned, a previous run
+        sqlite memo): when the stage is partitioned, a previous run
         exists, and the caller passes the ``changed_buckets`` diff of the
-        ingest lineage, only those buckets are rebuilt — ``build(buckets)``
-        receives the work list and the writer dynamically overwrites just
-        the dirty partitions.
+        ingest lineage, only those buckets are rebuilt — ``build`` receives
+        the work list (None means all buckets) and the writer overwrites
+        just the dirty partitions.
         """
         out_path = self.lineage.path(stage)
         if self.lineage.is_done(stage, input_fingerprint):
@@ -208,7 +219,7 @@ class KGPipeline:
 
         old_meta = self.lineage.read_meta(stage)
         incremental = (
-            partition_by == "bucket"
+            partitioned
             and changed_buckets is not None
             and old_meta is not None
             and old_meta.get("code_version") == CODE_VERSION
@@ -222,44 +233,14 @@ class KGPipeline:
             and 0 < len(changed_buckets)
         )
         t0 = time.time()
-        if incremental:
-            import inspect
-
-            df = (
-                build(changed_buckets)
-                if len(inspect.signature(build).parameters) > 0
-                else build().filter(F.col("bucket").isin(changed_buckets))
-            )
-            # dynamic overwrite only touches partitions the new DataFrame
-            # emits — a changed bucket that now produces ZERO rows (all its
-            # files deleted) would keep its stale partition. Clear every
-            # dirty partition first; the write rebuilds the non-empty ones.
-            _clear_partitions(self.spark, out_path, changed_buckets)
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(out_path)
-            )
+        if partitioned:
+            buckets = changed_buckets if incremental else None
+            _write_partitioned(self.spark, build(buckets), out_path, buckets)
         else:
-            import inspect
-
-            df = (
-                build(None)
-                if len(inspect.signature(build).parameters) > 0
-                else build()
-            )
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(out_path)
+            build().write.mode("overwrite").parquet(out_path)
         out = self.spark.read.parquet(out_path)
-        if bucket_col and bucket_col in out.columns:
-            pb = [r.asDict() for r in bucket_hashes(out, bucket_col).collect()]
-        else:
-            # single logical partition: whole-table hash
-            pb_df = out.withColumn("bucket", F.lit(0))
-            pb = [r.asDict() for r in bucket_hashes(pb_df).collect()]
+        hashed = out if partitioned else out.withColumn("bucket", F.lit(0))
+        pb = [r.asDict() for r in bucket_hashes(hashed).collect()]
         wall_ms = (time.time() - t0) * 1000
         self.lineage.record(stage, pb, wall_ms, input_fingerprint)
         self.metrics[stage] = {
@@ -288,7 +269,7 @@ class KGPipeline:
         changed = self.lineage.changed_buckets("ingest", ingest_pb)
         self.lineage.record("ingest", ingest_pb, 0.0, None)
 
-        def build_sites(buckets=None):
+        def build_sites(buckets):
             src = (
                 ingest.filter(F.col("bucket").isin(buckets))
                 if buckets is not None
@@ -304,20 +285,8 @@ class KGPipeline:
             # violations are bucket-partitioned like every other per-record
             # output: an incremental run rewrites only the dirty buckets'
             # violation partitions instead of clobbering the whole table
-            def write_side(df, name):
-                p = os.path.join(self.workdir, name)
-                if buckets is None:
-                    df.write.mode("overwrite").partitionBy("bucket").parquet(p)
-                else:
-                    _clear_partitions(self.spark, p, buckets)
-                    (
-                        df.write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("bucket")
-                        .parquet(p)
-                    )
-
-            write_side(
+            _write_partitioned(
+                self.spark,
                 bad.select(
                     "repo",
                     "path",
@@ -326,15 +295,18 @@ class KGPipeline:
                     "violation_reason",
                     "bucket",
                 ),
-                "violations",
+                os.path.join(self.workdir, "violations"),
+                buckets,
             )
             # P7: out-of-vocabulary normalized_uri rows (validators.py:354-419)
             # + P3: locations with a CRS the engine cannot reproject
-            write_side(
+            _write_partitioned(
+                self.spark,
                 vocab_membership_violations(ok, vocab).unionAll(
                     location_crs_violations(ok, vocab)
                 ),
-                "vocab_violations",
+                os.path.join(self.workdir, "vocab_violations"),
+                buckets,
             )
             sites = extract.normalize_sites(ok, vocab)
             return sites.join(
@@ -345,7 +317,7 @@ class KGPipeline:
             "sites_rel",
             build_sites,
             ingest_fp,
-            partition_by="bucket",
+            partitioned=True,
             changed_buckets=changed,
         )
 
@@ -355,14 +327,12 @@ class KGPipeline:
                 extract.explode_inventories(sites, vocab)
             ),
             ingest_fp,
-            bucket_col=None,
         )
 
         membership = self._run_stage(
             "membership",
             lambda: canonicalize.build_membership(sites, system_edges, curated_edges),
             ingest_fp,
-            bucket_col=None,
         )
 
         sites_with_dedup = sites.drop("dedup_site_id").join(
@@ -373,16 +343,14 @@ class KGPipeline:
             "dedup_sites",
             lambda: dedup.merge_dedup_sites(sites_with_dedup),
             ingest_fp,
-            bucket_col=None,
         )
         dedup_invs = self._run_stage(
             "dedup_inventories",
             lambda: dedup.select_dedup_inventories(sites_with_dedup, inv_views),
             ingest_fp,
-            bucket_col=None,
         )
 
-        def build_triples(buckets=None):
+        def build_triples(buckets):
             src = (
                 ingest.filter(F.col("bucket").isin(buckets))
                 if buckets is not None
@@ -400,7 +368,7 @@ class KGPipeline:
             "triples",
             build_triples,
             ingest_fp,
-            partition_by="bucket",
+            partitioned=True,
             changed_buckets=changed,
         )
 
@@ -426,7 +394,6 @@ class KGPipeline:
             "entity_triples",
             lambda: entity_triples_op(vocab),
             vocab_fp,
-            bucket_col=None,
         )
 
         sameas = self._run_stage(
@@ -438,7 +405,6 @@ class KGPipeline:
                 )
             ),
             ingest_fp,
-            bucket_col=None,
         )
 
         with open(os.path.join(self.workdir, "metrics.json"), "w") as f:

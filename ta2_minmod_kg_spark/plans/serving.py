@@ -134,14 +134,16 @@ def export_csv_rows(
 
 def describe_resource(triples: DataFrame, subj: str, hops: int = 1) -> DataFrame:
     """Q4 LOD dereference: the subject's subgraph, expanded ``hops`` times
-    along object links (bounded iterative filter-join)."""
-    frontier = triples.filter(F.col("subj") == subj)
+    along object links (bounded iterative filter-join).  Each triple is
+    returned once, even when several sites emitted it (a shared node)."""
+    spo = triples.select("subj", "pred", "obj")
+    frontier = spo.filter(F.col("subj") == subj)
     out = frontier
     for _ in range(hops):
         objs = frontier.select(F.col("obj").alias("subj")).distinct()
-        frontier = triples.join(objs, "subj", "left_semi")
-        out = out.unionByName(frontier).distinct()
-    return out.select("subj", "pred", "obj")
+        frontier = spo.join(objs, "subj", "left_semi")
+        out = out.unionByName(frontier)
+    return out.distinct()
 
 
 # the reference's CONSTRUCT path expression excludes these from traversal

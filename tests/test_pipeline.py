@@ -132,6 +132,70 @@ def test_serving_queries(pipeline_out, spark):
     assert sub.count() > 0
 
 
+def test_describe_resource_returns_shared_node_once(spark):
+    """A one-hop node emitted by two sites (one triple row per site_id)
+    comes back once per (subj, pred, obj)."""
+    from ta2_minmod_kg_spark.plans import serving
+
+    rows = [
+        ("mr:site_a", "mo:located_in", "mr:node", "site_a", 0),
+        ("mr:site_b", "mo:located_in", "mr:node", "site_b", 1),
+        ("mr:node", "rdfs:label", '"shared"', "site_a", 0),
+        ("mr:node", "rdfs:label", '"shared"', "site_b", 1),
+        ("mr:node", "mo:code", '"X1"', "site_a", 0),
+        ("mr:node", "mo:code", '"X1"', "site_b", 1),
+    ]
+    triples = spark.createDataFrame(
+        rows, "subj string, pred string, obj string, site_id string, bucket int"
+    )
+    got = [tuple(r) for r in serving.describe_resource(triples, "mr:site_a").collect()]
+    assert len(got) == len(set(got)), got
+    assert set(got) == {
+        ("mr:site_a", "mo:located_in", "mr:node"),
+        ("mr:node", "rdfs:label", '"shared"'),
+        ("mr:node", "mo:code", '"X1"'),
+    }
+
+
+def test_line_terminator_paths_are_violations(spark, tmp_path):
+    """The filename rule is a full match on both sides of the pipeline:
+    a path ending in a line terminator is a violation, never a document
+    that the JVM filter keeps but the Python kernel drops.  Every
+    document lands in exactly one of sites_rel / violations, and a
+    rejected document emits no triples."""
+    from ta2_minmod_kg_spark.operators.constrained import (
+        structural_then_constrained_parsed,
+    )
+
+    paths = ["a/b.json", "a/b.json\r", "a/b.json\u2028", "a/b.json\r\n", "a/b.json\n"]
+    contents = []
+    n = 0
+    while len(contents) < len(paths):
+        c = json.dumps(synthetic.make_record(n, 50))
+        if structural_then_constrained_parsed(c)[0] is None:
+            contents.append(c)
+        n += 1
+    ingest = spark.createDataFrame(
+        [("repo", p, "c", "json", c) for p, c in zip(paths, contents)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    wd = str(tmp_path / "wd_paths")
+    out = KGPipeline(spark, wd, n_buckets=2).run(
+        ingest, vocab.vocab_dataframes(spark)
+    )
+
+    kept = {r["path"]: r["site_id"] for r in out["sites_rel"].collect()}
+    bad = spark.read.parquet(os.path.join(wd, "violations")).collect()
+    rejected = [r["path"] for r in bad]
+    assert sorted(kept) == ["a/b.json"]
+    assert sorted(rejected) == sorted(paths[1:])
+    assert {r["violation_reason"] for r in bad} == {"structural"}
+    triple_sites = {
+        r["site_id"] for r in out["triples"].select("site_id").distinct().collect()
+    }
+    assert triple_sites == set(kept.values())
+
+
 def test_zz_resume_recomputes_on_input_change(pipeline_out, spark, tmp_path):
     """Input change invalidates the fingerprint → stage recomputes.
     Runs LAST, on a COPY of the workdir, so earlier tests' lazy parquet

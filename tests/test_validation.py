@@ -93,15 +93,16 @@ def test_mentions_skip_nulls(spark):
 def test_merc_inverse_golden():
     """EPSG:3857 → 4326 pure-math reprojection against the projection's
     published constants (web-mercator bounds and a known city point)."""
-    from ta2_minmod_kg_spark.operators.extract import _merc_inverse, _wkt_centroid
+    from ta2_minmod_kg_spark.functions.geo import point_to_wgs84
+    from ta2_minmod_kg_spark.operators.extract import _wkt_centroid
 
-    lat, lon = _merc_inverse(0.0, 0.0)
+    lon, lat = point_to_wgs84(0.0, 0.0, "EPSG:3857")
     assert lat == 0.0 and lon == 0.0
-    lat, lon = _merc_inverse(20037508.342789244, 20037508.342789244)
+    lon, lat = point_to_wgs84(20037508.342789244, 20037508.342789244, "EPSG:3857")
     assert abs(lon - 180.0) < 1e-9
     assert abs(lat - 85.05112877980659) < 1e-9  # mercator latitude bound
     # NYC: x,y from the standard forward transform of (-74, 40.7128)
-    lat, lon = _merc_inverse(-8237642.318702244, 4970071.579142425)
+    lon, lat = point_to_wgs84(-8237642.318702244, 4970071.579142425, "EPSG:3857")
     assert abs(lon - (-74.0)) < 1e-9
     assert abs(lat - 40.7128) < 1e-6
 
