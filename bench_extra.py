@@ -4,13 +4,10 @@ NOT part of the frozen driver contract (bench.py).  Provides:
 
 - ``--explain [names...]``: dump ``.explain('formatted')`` for declared
   queries to ``plans/<tag>/<name>_<suffix>.txt``;
-- ``--stage-kg N_SITES``: the bench kg job with per-stage wall breakdown
-  printed as JSON (same operators as bench.py's _kg_job, finer timers);
 - ``--noop NAME``: time one declared query with the noop sink, best of 3.
 
 Usage:
     python bench_extra.py --explain --tag r06 --suffix before
-    python bench_extra.py --stage-kg 60000
     python bench_extra.py --noop docs_simhash
 """
 
@@ -71,73 +68,6 @@ def noop_query(name: str, trials: int = 3) -> None:
     spark.stop()
 
 
-def stage_kg(n_sites: int) -> None:
-    """bench.py's _kg_job with finer-grained stage timers (same operators,
-    same order; measurement-only — durations printed as JSON)."""
-    from pyspark.sql import functions as F
-
-    from ta2_minmod_kg_spark.operators import (
-        canonicalize,
-        dedup,
-        extract,
-        grade_tonnage,
-    )
-    from ta2_minmod_kg_spark.sources import synthetic, vocab as vocab_mod
-
-    spark = _spark()
-    sc = spark.sparkContext
-    # warm the python workers like bench.py does
-    spark.range(0, 1000, 1, 8).mapInPandas(
-        lambda it: it, schema="id long"
-    ).groupBy((F.col("id") % 8).alias("k")).count().count()
-
-    t: dict[str, float] = {}
-
-    def mark(label, fn):
-        sc.setJobDescription(label)
-        t0 = time.time()
-        out = fn()
-        t[label] = round(time.time() - t0, 3)
-        print(f"[stage] {label}: {t[label]}", file=sys.stderr, flush=True)
-        return out
-
-    n_parts = max(128, -(-n_sites // 2230))
-    ingest = synthetic.synthesize_ingest(spark, n_sites, partitions=n_parts)
-    ingest = ingest.persist()
-    mark("gen+count", ingest.count)
-
-    vdfs = mark("vocab", lambda: vocab_mod.vocab_dataframes(spark))
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vdfs).persist()
-    mark("normalize+count", sites.count)
-
-    edges = synthetic.synthesize_system_edges(spark, n_sites, partitions=n_parts)
-    curated = synthetic.curated_edges_df(spark, n_sites)
-    membership = mark(
-        "build_membership",
-        lambda: canonicalize.build_membership(sites, edges, curated).persist(),
-    )
-    mark("membership_count", membership.count)
-
-    swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-    inv = extract.explode_inventories(sites, vdfs)
-    gt = grade_tonnage.grade_tonnage_view(inv)
-    mega = synthetic.giant_size(n_sites)
-    merged = dedup.merge_dedup_sites(swd, big_group_threshold=mega)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def counts():
-        with ThreadPoolExecutor(2) as pool:
-            f1, f2 = pool.submit(merged.count), pool.submit(gt.count)
-            return f1.result(), f2.result()
-
-    n_dedup, n_gt = mark("dedup_gt", counts)
-    mark("triples", extract.extract_triples(ingest).count)
-    t["n_dedup"], t["n_gt"] = n_dedup, n_gt
-    print("STAGES " + json.dumps(t), flush=True)
-    spark.stop()
-
-
 if __name__ == "__main__":
     args = sys.argv[1:]
     if args and args[0] == "--explain":
@@ -152,8 +82,6 @@ if __name__ == "__main__":
                 names.append(rest[0])
                 rest = rest[1:]
         dump_explains(names, tag, suffix)
-    elif args and args[0] == "--stage-kg":
-        stage_kg(int(args[1]))
     elif args and args[0] == "--noop":
         noop_query(args[1])
     else:

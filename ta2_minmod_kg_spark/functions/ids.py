@@ -22,6 +22,7 @@ MR_NS = "https://minmod.isi.edu/resource/"
 MO_NS = "https://minmod.isi.edu/ontology/"
 MD_NS = "https://minmod.isi.edu/derived/"
 USER_NS = "https://minmod.isi.edu/users/"
+SYSTEM_PREFIX = USER_NS + "s/"  # system (non-expert) users, ref user_extra.py:4-5
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
 
 # -- slugify ---------------------------------------------------------------
@@ -99,7 +100,7 @@ def get_username(uri: str) -> str:
 
 def is_system_user(created_by: str) -> bool:
     # ref: models/kgrel/user_extra.py:4-5
-    return (created_by or "").startswith("https://minmod.isi.edu/users/s/")
+    return (created_by or "").startswith(SYSTEM_PREFIX)
 
 
 def get_source_uri(source_id: str) -> str:

@@ -30,6 +30,7 @@ from datetime import datetime, timezone
 from typing import Optional
 
 from .ids import (
+    MD_NS,
     MO_NS,
     MR_NS,
     doc_uri_to_slug,
@@ -46,7 +47,7 @@ RDF_TYPE = "rdf:type"
 PREFIXES = {
     "mr": MR_NS,
     "mo": MO_NS,
-    "md": "https://minmod.isi.edu/derived/",
+    "md": MD_NS,
     "rdf": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
     "rdfs": "http://www.w3.org/2000/01/rdf-schema#",
     "xsd": XSD,

@@ -15,7 +15,7 @@ grade-tonnage Arrow kernels.
 
 from __future__ import annotations
 
-MR = "https://minmod.isi.edu/resource/"
+from .ids import MR_NS as MR
 
 UNIT_TONNES = MR + "Q200"
 UNIT_MT = MR + "Q202"  # million tonnes (canonical tonnage unit)

@@ -28,6 +28,12 @@ Pipeline:
                              for singletons), `etl/same_as.py:324-334`.
 
 All set algebra is semi/anti joins; the only iterative part is CC.
+``build_membership`` probes the edge set once (bounded
+``limit(threshold+1)``): when it and the site ids fit the driver, steps
+3-6 run in driver memory over ``min_label_components``, the one
+union-find shared with ``connected_components`` and step 4; when only
+the edges fit, the probe's components stand in for step 3; otherwise the
+distributed star rounds run.
 """
 
 from __future__ import annotations
@@ -35,7 +41,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .connected_components import connected_components
+from .connected_components import (
+    component_rows,
+    min_label_components,
+    probe_edges,
+    star_rounds,
+)
 
 
 def auto_link_edges(sites_rel: DataFrame) -> DataFrame:
@@ -77,15 +88,7 @@ def curated_gold_groups(curated: DataFrame) -> DataFrame:
     what makes a negative override actively SPLIT sites apart even when
     system edges still connect them.
     """
-    spark = curated.sparkSession
-    comp = _gold_components(curated.collect())
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {"node": list(comp.keys()), "component": list(comp.values())},
-        dtype="object",
-    )
-    return spark.createDataFrame(pdf, schema="node string, component string")
+    return component_rows(curated.sparkSession, _gold_components(curated.collect()))
 
 
 def _gold_components(rows) -> dict[str, str]:
@@ -100,27 +103,16 @@ def _gold_components(rows) -> dict[str, str]:
         else:
             neg[key] = min(neg.get(key, t), t)
 
-    parent: dict[str, str] = {}
+    def pairs():
+        for (a, b), t in pos.items():
+            if (a, b) in neg and neg[(a, b)] <= t:
+                # cancelled — nodes remain as singletons
+                yield a, a
+                yield b, b
+            else:
+                yield a, b
 
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for (a, b), t in pos.items():
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        if (a, b) in neg and neg[(a, b)] <= t:
-            continue  # cancelled — nodes remain as singletons
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    return {x: find(x) for x in parent}
+    return min_label_components(pairs())
 
 
 def splice_gold_groups(membership: DataFrame, gold: DataFrame) -> DataFrame:
@@ -168,11 +160,11 @@ def attach_singletons(membership: DataFrame, sites_rel: DataFrame) -> DataFrame:
     return known.unionAll(singles)
 
 
-def with_dedup_id(membership: DataFrame, already_canonical: bool = False) -> DataFrame:
+def with_dedup_id(membership: DataFrame) -> DataFrame:
     """(node, component) → (site_id, dedup_site_id) with the reference's
-    deterministic id (dedup_ + min member)."""
-    canon = membership if already_canonical else relabel_min(membership)
-    return canon.select(
+    deterministic id (dedup_ + min member); components must already be
+    labelled by their min member."""
+    return membership.select(
         F.col("node").alias("site_id"),
         F.concat(F.lit("dedup_"), F.col("component")).alias("dedup_site_id"),
     )
@@ -195,34 +187,13 @@ def sameas_triples(membership: DataFrame) -> DataFrame:
     )
 
 
-def _driver_membership(
-    edge_pairs, curated_rows, site_ids
-) -> dict[str, str]:
-    """The full G1-G5 set algebra in driver memory — exact mirror of the
-    distributed path (CC → splice_gold_groups → attach_singletons →
-    relabel-min), used when both the edge set and the site-id list fit the
-    driver threshold.  Beats ~10 distributed shuffle jobs of fixed latency
-    at small inputs; never fires at production scale."""
-    # CC by union-find with min-label roots
-    parent: dict[str, str] = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for u, v in edge_pairs:
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            lo, hi = (ru, rv) if ru < rv else (rv, ru)
-            parent[hi] = lo
-        parent.setdefault(u, find(u))
-        parent.setdefault(v, find(v))
-    comp = {x: find(x) for x in parent}
-
+def _driver_membership(comp, curated_rows, site_ids) -> dict[str, str]:
+    """The G3-G5 set algebra in driver memory over the CC components
+    ``comp`` — exact mirror of the distributed path (splice_gold_groups →
+    attach_singletons → relabel-min), used when both the edge set and the
+    site-id list fit the driver threshold.  Beats ~10 distributed shuffle
+    jobs of fixed latency at small inputs; never fires at production
+    scale."""
     # splice gold groups (replace_group semantics)
     new_key: dict[str, tuple] = {}
     if curated_rows is not None:
@@ -276,20 +247,13 @@ def build_membership(
         edges = edges.unionAll(
             system_edges.select(F.col("ms_1").alias("u"), F.col("ms_2").alias("v"))
         )
-    raw = edges.select(
-        F.col("u").cast("string"), F.col("v").cast("string")
-    ).localCheckpoint(eager=False)
-
-    # ONE bounded job sizes the edge set, fetches it, and materializes
-    # the lazy checkpoint blocks (r06 — formerly an eager checkpoint job,
-    # a count job, then a separate full toPandas): a limit(threshold+1)
-    # Arrow read returns ALL rows iff the table fits the threshold (a
-    # limit larger than the table is the table).  Arrow-path transfers
-    # (toPandas), not row collect(): py4j row deserialization costs
-    # ~1-2 s per 100k narrow rows and is pure scale-invariant driver
-    # tail in the scaling probes.
-    edges_pdf = raw.limit(driver_finish_threshold + 1).toPandas()
-    if len(edges_pdf) <= driver_finish_threshold:
+    # ONE bounded probe fetches the edge set; on overflow straight into
+    # the distributed rounds
+    raw, pairs = probe_edges(edges, driver_finish_threshold)
+    if pairs is None:
+        membership = star_rounds(raw, driver_finish_threshold)
+    else:
+        comp = min_label_components(pairs)
         # same bounded-read trick for the site-id list: with few edges
         # but many sites (sparse duplication at production scale) an
         # unguarded toPandas would ship the whole site_id column to the
@@ -300,26 +264,12 @@ def build_membership(
             .toPandas()
         )
         if len(ids_pdf) <= driver_finish_threshold:
-            site_ids = ids_pdf["site_id"].tolist()
-            pairs = list(zip(edges_pdf["u"].tolist(), edges_pdf["v"].tolist()))
             rows = curated.collect() if curated is not None else None
-            member = _driver_membership(pairs, rows, site_ids)
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                {
-                    "site_id": list(member.keys()),
-                    "dedup_site_id": ["dedup_" + c for c in member.values()],
-                },
-                dtype="object",
-            )
-            return spark.createDataFrame(
-                pdf, schema="site_id string, dedup_site_id string"
-            )
-
-    membership = connected_components(
-        raw, driver_finish_threshold=driver_finish_threshold
-    )
+            member = _driver_membership(comp, rows, ids_pdf["site_id"].tolist())
+            return with_dedup_id(component_rows(spark, member))
+        # the sites overflow: the components the probe computed stand in
+        # for the distributed CC
+        membership = component_rows(spark, comp)
     if curated is not None:
         gold = curated_gold_groups(curated)
         # barrier: attach_singletons scans the spliced membership twice
@@ -328,5 +278,5 @@ def build_membership(
         )
     membership = attach_singletons(membership, sites_rel)
     # CC labels, splice output, and singleton labels are all already the
-    # min member — skip the extra relabel shuffle
-    return with_dedup_id(membership, already_canonical=True)
+    # min member — no relabel shuffle
+    return with_dedup_id(membership)

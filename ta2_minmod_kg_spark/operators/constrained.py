@@ -22,14 +22,17 @@ oracle-tested by EXECUTING the reference's own
 ``get_dataclass_deserializer(MineralSite)`` via tests/refshim.py and
 asserting accept/reject equality (tests/test_constrained.py).
 
-Execution: one Arrow-batched kernel (``site_error_udf``) over the raw
-``content`` column — the same shape as the normalize kernel; payloads
-never per-row through Python UDF machinery.  Short-circuits on the first
-error like the reference's raise.  The kernel also owns the STRUCTURAL
-rules (parseable document, identity fields, exactly one site-level
-reference) so ``split_violations`` needs no ``from_json`` field access —
-each access would be its own full-document lex (Catalyst prunes the
-parse schema per ``GetStructField``; CSE never merges them).
+Document validity has ONE definition, ``document_error(path, content)``:
+the filename charset rule, then the STRUCTURAL rules (parseable document,
+identity fields, exactly one site-level reference), then the
+constrained-type tree, short-circuiting on the first error like the
+reference's raise.  Every consumer of raw documents calls it — the
+``site_error_udf`` Arrow kernel behind ``split_violations``, the
+normalize kernel and the triple fan-out kernel (operators/extract.py) —
+so a quarantined document reaches no output.  ``split_violations`` needs
+no ``from_json`` field access: each access would be its own
+full-document lex (Catalyst prunes the parse schema per
+``GetStructField``; CSE never merges them).
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ from __future__ import annotations
 import functools
 import json
 import math
+import re
 from typing import Any, Optional
 from urllib.parse import urlparse
 
@@ -315,8 +319,8 @@ def constrained_type_error(d: Any) -> Optional[str]:
     Mirrors ``get_dataclass_deserializer(minmodkg.models.kg.mineral_site.
     MineralSite)`` + the ``modified_at``-presence check
     (validators.py:336-339); the site-level reference-count rule
-    (== 1, validators.py:52-54) stays in ``split_violations``'s JVM
-    predicates.
+    (== 1, validators.py:52-54) is a structural rule, checked first by
+    ``structural_then_constrained_parsed``.
     """
     if not isinstance(d, dict):
         return "$"
@@ -368,19 +372,12 @@ def constrained_type_error(d: Any) -> Optional[str]:
 
 
 def structural_then_constrained_parsed(c) -> tuple[Optional[str], Optional[dict]]:
-    """split_violations semantics in ONE parse: the structural rules
-    (parseable document, identity fields present, exactly one site-level
-    reference — validators.py:44-54) checked FIRST and labelled
-    'structural', then the constrained-type tree.  Behavior-identical to
-    the former JVM ``from_json`` predicate chain, which lexed the full
-    document once PER FIELD ACCESS (4-5 parses/row in the measured plan
-    — Catalyst prunes ``from_json`` schemas per ``GetStructField``, so
-    common-subexpression elimination never merges them).
+    """The content rules of ``document_error`` in ONE parse: the
+    structural rules (parseable document, identity fields present,
+    exactly one site-level reference — validators.py:44-54) checked FIRST
+    and labelled 'structural', then the constrained-type tree.
 
-    Returns ``(error, parsed_dict)`` so callers that go on to CONSUME a
-    valid document (the fused validate+normalize kernel,
-    operators/extract.py r06) reuse this parse instead of running
-    ``json.loads`` a second time; ``parsed_dict`` is None whenever the
+    Returns ``(error, parsed_dict)``; ``parsed_dict`` is None whenever the
     document is not a parseable dict."""
     if c is None:
         return "structural", None
@@ -405,13 +402,29 @@ def structural_then_constrained_parsed(c) -> tuple[Optional[str], Optional[dict]
         return "$", d  # quarantine contract: reject the ONE record, not the job
 
 
-def _structural_then_constrained(c) -> Optional[str]:
-    return structural_then_constrained_parsed(c)[0]
+# Filename charset rule: the WHOLE path must consist of these characters
+# (``fullmatch``: ``$`` would also match before a trailing newline).
+_PATH_RE = re.compile(r"[a-zA-Z0-9_\-,./]+")
+
+
+def document_error(
+    path: Optional[str], content
+) -> tuple[Optional[str], Optional[dict]]:
+    """The document-validity rule: ``(reason, parsed_dict)``, reason None
+    for a valid document.
+
+    A path outside the filename charset is 'structural' (a NULL path
+    passes); otherwise ``structural_then_constrained_parsed(content)``
+    decides.  The parsed dict comes back so a kernel that goes on to
+    consume a valid document reuses this parse."""
+    if path is not None and _PATH_RE.fullmatch(path) is None:
+        return "structural", None
+    return structural_then_constrained_parsed(content)
 
 
 @pandas_udf(StringType())
-def site_error_udf(content: pd.Series) -> pd.Series:
-    """Structural + constrained validation, single ``json.loads`` per row."""
+def site_error_udf(path: pd.Series, content: pd.Series) -> pd.Series:
+    """``document_error`` reasons, one ``json.loads`` per row."""
     return pd.Series(
-        [_structural_then_constrained(c) for c in content], dtype="object"
+        [document_error(p, c)[0] for p, c in zip(path, content)], dtype="object"
     )

@@ -6,14 +6,17 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
                           invariant carried through every downstream table.
 - ``parse_sites``       — ``from_json`` with the declared schema (JVM parse,
                           no inference).
-- ``split_violations``  — filename, structural and constrained-type rules;
+- ``split_violations``  — the document-validity rule
+                          (``constrained.document_error``: filename,
+                          structural and constrained-type rules);
                           violating documents split off with a reason.
 - ``normalize_sites``   — the relational site row (ref
                           `kgrel/mineral_site.py:198-244`) in one Arrow
                           pass: site-id minting, WKT centroids, and the
                           source-score / crs lookups as driver dicts.
-- ``extract_triples``   — ``mapInPandas`` fan-out of each record into its
-                          (subj, pred, obj) rows.
+- ``extract_triples``   — ``mapInArrow`` fan-out of each valid record into
+                          its (subj, pred, obj) rows; a document that
+                          ``document_error`` rejects emits none.
 - ``explode_inventories`` — per-inventory rows feeding the grade-tonnage
                           aggregate (broadcast join for material-form
                           conversion).
@@ -25,7 +28,6 @@ columns so the parquet scan prunes (``PushedFilters`` visible in explain).
 
 from __future__ import annotations
 
-import json
 import math
 import re
 
@@ -38,20 +40,7 @@ from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import parse_modified_at_ns, site_to_triples
 from ..schemas import RAW_SITE, SITE_REL, TRIPLE
-
-# Filename charset rule: the WHOLE path must consist of these characters.
-# One class, two full-match forms: Java's ``$`` also matches before a
-# trailing line terminator (``\r``, ``\u2028``, ``\r\n``) and Python's
-# before a trailing ``\n``, so both sides anchor explicitly.
-_PATH_CHARS = r"[a-zA-Z0-9_\-,./]+"
-_PATH_OK_JVM = "^" + _PATH_CHARS + r"\z"  # rlike: java.util.regex find()
-_PATH_OK_RE = re.compile(_PATH_CHARS)  # used with .fullmatch
-
-
-def path_ok(path: str | None) -> bool:
-    """Python form of the filename rule; a NULL path passes (the JVM
-    ``rlike`` on NULL is NULL, which ``split_violations`` treats as ok)."""
-    return path is None or _PATH_OK_RE.fullmatch(path) is not None
+from .constrained import document_error, site_error_udf
 
 
 def with_lineage(ingest: DataFrame) -> DataFrame:
@@ -72,28 +61,23 @@ def parse_sites(ingest: DataFrame) -> DataFrame:
 def split_violations(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """P5/P6 validation: ``(ok, bad)`` sides of ``parse_sites`` output.
 
-    A document is ok when its ``path`` passes the filename charset rule
-    and its raw JSON passes the structural rules (required idents present,
-    exactly one site-level reference, ref validators.py:44-54) and the
+    A document is ok when ``constrained.document_error`` finds no
+    reason: its ``path`` passes the filename charset rule and its raw
+    JSON passes the structural rules (required idents present, exactly
+    one site-level reference, ref validators.py:44-54) and the
     reference's constrained-type tree (CleanedNotEmptyStr,
-    confidence ∈ [0,1], URL-valid IRIs, numeric measures —
-    operators/constrained.py, oracle-tested against the reference's
-    executed deserializer).  The bad side carries a ``violation_reason``
-    column: the failing field path, or 'structural'.
+    confidence ∈ [0,1], URL-valid IRIs, numeric measures — oracle-tested
+    against the reference's executed deserializer).  The bad side
+    carries a ``violation_reason`` column: the failing field path, or
+    'structural'.
     """
-    from .constrained import site_error_udf
-
-    # Structural + constrained rules fused into ONE Arrow kernel parse
-    # (operators/constrained.py _structural_then_constrained).  Keep
-    # ``site.*`` out of this plan: each field access adds one pruned
-    # ``from_json`` that lexes the whole document again (4-5 per row for
-    # the structural fields, verified with .explain); with none, Catalyst
-    # prunes ``from_json`` out entirely.
+    # All rules in ONE Arrow kernel parse.  Keep ``site.*`` out of this
+    # plan: each field access adds one pruned ``from_json`` that lexes
+    # the whole document again (4-5 per row for the structural fields,
+    # verified with .explain); with none, Catalyst prunes ``from_json``
+    # out entirely.
     tagged = parsed.withColumn(
-        "violation_reason",
-        F.when(~F.col("path").rlike(_PATH_OK_JVM), F.lit("structural")).otherwise(
-            site_error_udf(F.col("content"))
-        ),
+        "violation_reason", site_error_udf(F.col("path"), F.col("content"))
     )
     ok_df = tagged.filter(F.col("violation_reason").isNull()).drop(
         "violation_reason"
@@ -172,9 +156,7 @@ def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, 
 SITE_REL_COLS = [f.name for f in SITE_REL.fields]
 
 
-def _normalize_batch_fn(
-    crs_names: dict, source_scores: dict, validate: bool = False
-):
+def _normalize_batch_fn(crs_names: dict, source_scores: dict):
     """Single-parse normalization kernel (P2+P3 in one Arrow pass).
 
     One ``json.loads`` per row builds every SITE_REL column.  A
@@ -185,18 +167,14 @@ def _normalize_batch_fn(
     closure dicts — the reference's own broadcast-dict pattern
     (`services/kgrel_entity.py:57-75`).
 
-    ``validate=True`` (r06) FUSES split_violations' structural +
-    constrained check into the same parse: invalid rows are skipped (they
-    belong to the violations side-table), valid rows are normalized from
-    the already-parsed dict — one python pass and one ``json.loads``
-    where the unfused plan pays two of each.  Output columns are built as
+    Validation rides the same parse: ``document_error`` rejects a row
+    (it belongs to the violations side-table) or hands back the parsed
+    dict it is normalized from — one python pass and one ``json.loads``
+    per document.  Output columns are built as
     per-column lists (dict-of-lists → pandas), not a list of per-row
     dicts — the row-dict construction plus pandas' per-record inference
     was ~40% of the kernel's CPU at 2k-row chunks.
     """
-    if validate:
-        from .constrained import structural_then_constrained_parsed
-
     def norm_ids(entities):
         return [
             e["normalized_uri"][len(MR_NS):]
@@ -239,14 +217,9 @@ def _normalize_batch_fn(
         for repo, path, sha, content in zip(
             pdf["repo"], pdf["path"], pdf["content_sha256"], pdf["content"]
         ):
-            if validate:
-                if not path_ok(path):
-                    continue
-                err, site = structural_then_constrained_parsed(content)
-                if err is not None:
-                    continue
-            else:
-                site = json.loads(content)
+            err, site = document_error(path, content)
+            if err is not None:
+                continue
             username = get_username(site["created_by"])
             site_id = make_site_id(
                 username, site["source_id"], str(site["record_id"])
@@ -299,12 +272,12 @@ def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame
     The crs and data-source vocabularies collapse to driver dicts (they
     are broadcast-dim sized by definition) and ship in the task closure.
 
-    When ``parsed`` is the ok side of ``split_violations`` (it carries the
-    ``_prevalidated_source`` marker), the kernel runs over the UNFILTERED
-    source and performs the validation itself — same rows out, one python
-    pass and one parse instead of two (guide §4: cross the boundary once,
-    do everything per batch).  Any other input is normalized row by row
-    as given, so every row must already be a valid document.
+    The kernel validates every row with ``document_error`` and drops the
+    invalid ones.  When ``parsed`` is the ok side of ``split_violations``
+    (it carries the ``_prevalidated_source`` marker), the kernel runs over
+    the UNFILTERED source — same rows out, one python pass and one parse
+    instead of two (guide §4: cross the boundary once, do everything per
+    batch).
     """
     crs_names = {
         MR_NS + r["minmod_id"]: r["name"] for r in vocab["crs"].collect()
@@ -313,35 +286,15 @@ def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame
         r["uri"]: (float(r["score"]) if r["score"] is not None else None)
         for r in vocab["data_source"].collect()
     }
-    src = getattr(parsed, "_prevalidated_source", None)
-    validate = src is not None
-    base = src if validate else parsed
+    base = getattr(parsed, "_prevalidated_source", parsed)
     if "content_sha256" not in base.columns:
         base = with_lineage(base)
     return base.select("repo", "path", "content_sha256", "content").mapInPandas(
-        _normalize_batch_fn(crs_names, source_scores, validate=validate),
-        schema=SITE_REL,
+        _normalize_batch_fn(crs_names, source_scores), schema=SITE_REL
     )
 
 
 # -- triple fan-out -----------------------------------------------------------
-
-
-def _site_structurally_valid(site, path: str | None) -> bool:
-    """The structural and filename rules of ``split_violations`` — records
-    routed to the violations table for them must produce NO triples (and
-    must never crash the fan-out kernel at scale)."""
-    if not isinstance(site, dict):
-        return False
-    if site.get("source_id") is None or site.get("record_id") is None:
-        return False
-    if site.get("created_by") is None:
-        return False
-    if len(site.get("reference") or []) != 1:
-        return False
-    if not path_ok(path):
-        return False
-    return True
 
 
 def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
@@ -364,14 +317,11 @@ def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
         bucket_col = rb.column("bucket").to_pylist() if carry_bucket else None
         path_col = rb.column("path").to_pylist() if "path" in names else None
         for i, content in enumerate(rb.column("content").to_pylist()):
-            try:
-                site = json.loads(content)
-            except (ValueError, TypeError):
-                continue  # malformed document → violations table, no triples
-            if not _site_structurally_valid(
-                site, str(path_col[i]) if path_col is not None else None
-            ):
-                continue
+            err, site = document_error(
+                path_col[i] if path_col is not None else None, content
+            )
+            if err is not None:
+                continue  # quarantined document → violations table, no triples
             site_id, triples = site_to_triples(site, include_extra=include_extra)
             for s, p, o in triples:
                 subjs.append(s)
@@ -400,20 +350,19 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
     emitted triple — dirty ingest buckets then map 1:1 to dirty triple
     partitions for the incremental-recompute path (plans/pipeline.py).
     """
+    import pyarrow as pa
+
     carry = "bucket" in ingest.columns
     cols = ["content", "bucket"] if carry else ["content"]
     if "path" in ingest.columns:
         cols.append("path")  # enables the filename-charset validity rule
+    schema = TRIPLE
+    arrow_fields = [pa.field(f.name, pa.string(), f.nullable) for f in TRIPLE.fields]
     if carry:
-        schema = StructType(
-            TRIPLE.fields + [StructField("bucket", IntegerType())]
-        )
-    else:
-        schema = TRIPLE
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+        schema = StructType(TRIPLE.fields + [StructField("bucket", IntegerType())])
+        arrow_fields.append(pa.field("bucket", pa.int32()))
     return ingest.select(*cols).mapInArrow(
-        _triples_batch(include_extra, carry, to_arrow_schema(schema)),
+        _triples_batch(include_extra, carry, pa.schema(arrow_fields)),
         schema=schema,
     )
 

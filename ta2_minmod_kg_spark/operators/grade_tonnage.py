@@ -41,14 +41,13 @@ from typing import Iterable, Optional
 
 import pandas as pd
 
+from ..functions.ids import MR_NS as MR
 from ..functions.units import (
     UNIT_MT,
     UNIT_PERCENT,
     UnconvertibleUnitError,
     unit_conversion,
 )
-
-MR = "https://minmod.isi.edu/resource/"
 
 RESOURCE_CATS = frozenset({MR + c for c in ("Inferred", "Indicated", "Measured")})
 RESERVE_CATS = frozenset({MR + c for c in ("Proven", "Probable")})
@@ -374,8 +373,6 @@ _GT_OUT_COLS = [
     "date",
 ]
 
-_MR_NS = MR  # commodity normalized_uri prefix (== functions.ids.MR_NS)
-
 
 def _gt_fused_batch_fn(form_conv: dict):
     """Zero-shuffle GT kernel over sites_rel rows (r06).
@@ -400,7 +397,7 @@ def _gt_fused_batch_fn(form_conv: dict):
                 nu = ce.get("normalized_uri") if ce is not None else None
                 if nu is None:
                     continue
-                commodity = nu.replace(_MR_NS, "")
+                commodity = nu.replace(MR, "")
                 cat_raw = inv.get("category")
                 has_cat = cat_raw is not None and len(cat_raw) > 0
                 cats = [

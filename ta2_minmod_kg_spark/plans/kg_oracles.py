@@ -546,12 +546,12 @@ def kg_lod_closure_oracle_sql(n_sites: int) -> str:
     the monotone-frontier argument of plans/serving.py lod_closure).
     """
     from ..functions.rdf import site_to_triples
-    from ..operators.extract import _site_structurally_valid
+    from ..operators.constrained import document_error
 
     triples: set[tuple[str, str, str]] = set()
     for rec in _corpus_json(n_sites):
-        site = json.loads(rec)
-        if not _site_structurally_valid(site, None):
+        err, site = document_error(None, rec)
+        if err is not None:
             continue
         _, ts = site_to_triples(site)
         triples.update(ts)
@@ -627,7 +627,7 @@ def kg_entity_linking_oracle_sql(n_sites: int) -> str:
       vocabulary order) via ``row_number() OVER (ORDER BY score DESC,
       idx ASC)``.
     """
-    from ..operators.extract import _site_structurally_valid
+    from ..operators.constrained import document_error
     from ..sources import synthetic
     from ..sources.vocab import synthetic_vocab
 
@@ -636,7 +636,7 @@ def kg_entity_linking_oracle_sql(n_sites: int) -> str:
         variants = [False] + ([True] if synthetic.has_expert_dup(n) else [])
         for expert in variants:
             rec = synthetic.make_record(n, n_sites, expert=expert)
-            if not _site_structurally_valid(rec, None):
+            if document_error(None, json.dumps(rec))[0] is not None:
                 continue
             sid = synthetic.site_id_of(n, n_sites, expert=expert)
             for i, c in enumerate(rec.get("deposit_type_candidate") or []):
@@ -778,7 +778,7 @@ def _gt_inventory_groups(
     RAW category list; category URIs keep only normalized entries;
     material-form conversion resolves via the commodity_form vocabulary).
     """
-    from ..operators.extract import _site_structurally_valid
+    from ..operators.constrained import document_error
     from ..sources import synthetic
     from ..sources.vocab import MR, synthetic_vocab
 
@@ -793,7 +793,7 @@ def _gt_inventory_groups(
         variants = [False] + ([True] if synthetic.has_expert_dup(n) else [])
         for expert in variants:
             rec = synthetic.make_record(n, n_sites, expert=expert)
-            if not _site_structurally_valid(rec, None):
+            if document_error(None, json.dumps(rec))[0] is not None:
                 continue
             sid = synthetic.site_id_of(n, n_sites, expert=expert)
             for inv in rec.get("mineral_inventory") or []:
@@ -1021,8 +1021,8 @@ def _cdr_expected_records(n_sites: int) -> list[tuple[str, str, str]]:
       format_nanoseconds via the reference's misc.utils).
 
     Two engine helpers are borrowed for INPUT derivation only, each with
-    its own independent test coverage: ``_site_structurally_valid``
-    (P6, refshim-fuzzed) and ``_wkt_centroid`` (P3, pure-Snyder math
+    its own independent test coverage: ``document_error``
+    (P5/P6, refshim-fuzzed) and ``_wkt_centroid`` (P3, pure-Snyder math
     goldens) — the reference's own corpus generator uses the same forward
     transforms, so restating the inverse here would re-derive the same
     code, not add independence.  GT doubles are UNROUNDED — the engine's
@@ -1033,7 +1033,8 @@ def _cdr_expected_records(n_sites: int) -> list[tuple[str, str, str]]:
     import importlib
     from types import SimpleNamespace as NS
 
-    from ..operators.extract import _site_structurally_valid, _wkt_centroid
+    from ..operators.constrained import document_error
+    from ..operators.extract import _wkt_centroid
     from ..sources import synthetic
     from ..sources.vocab import MR, synthetic_vocab
 
@@ -1080,7 +1081,7 @@ def _cdr_expected_records(n_sites: int) -> list[tuple[str, str, str]]:
         variants = [False] + ([True] if synthetic.has_expert_dup(n) else [])
         for expert in variants:
             rec = synthetic.make_record(n, n_sites, expert=expert)
-            if not _site_structurally_valid(rec, None):
+            if document_error(None, json.dumps(rec))[0] is not None:
                 continue
             sid = synthetic.site_id_of(n, n_sites, expert=expert)
             loc = rec.get("location_info") or {}

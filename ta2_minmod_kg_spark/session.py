@@ -9,6 +9,11 @@ Local tests run on ``local[N]`` but every config choice is made for a
 - shuffle partitions default to cores in local mode; on a cluster this is
   overridden to ~2-3x total cores (or left to AQE's coalescing from a high
   initial number).
+
+Defaults fit the machine: without ``SPARK_GRAFT_CPUS`` the local master
+and the shuffle partitions use the CPUs this process may run on, and
+without ``SPARK_DRIVER_MEM`` the driver (which hosts the executors in
+local mode) gets half the physical RAM.
 """
 
 from __future__ import annotations
@@ -17,7 +22,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def machine_cpus() -> int:
+    """CPUs in this process's affinity mask (all CPUs where there is none)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def machine_driver_memory() -> str:
+    """Half the physical RAM in whole GiB (at least 1g), as a JVM size."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
 
 
 def get_spark(
@@ -26,10 +42,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get(
-        "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    )
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or machine_cpus())
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    nshuffle = shuffle_partitions or cpus
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -41,7 +56,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or machine_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

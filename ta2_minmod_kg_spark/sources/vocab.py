@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MR = "https://minmod.isi.edu/resource/"
+from ..functions.ids import MR_NS as MR
 
 # -- deterministic synthetic vocabulary ---------------------------------------
 

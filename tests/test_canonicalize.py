@@ -225,3 +225,48 @@ def test_build_membership_many_sites_few_edges(spark):
     got = build_membership(sites, None, None, driver_finish_threshold=8).toPandas()
     got_map = dict(zip(got["site_id"], got["dedup_site_id"]))
     assert got_map == {f"s{i:03d}": f"dedup_s{i:03d}" for i in range(n)}
+
+
+@pytest.mark.parametrize("regime", ["edges_overflow", "sites_overflow"])
+def test_build_membership_fetches_edges_once(spark, monkeypatch, regime):
+    """The edge set goes to the driver at most once: one bounded
+    limit(threshold+1) probe is shared by the driver fast path and the
+    CC, whether the edges overflow the threshold (straight into the
+    distributed rounds) or only the site ids do (the probe's components
+    are reused).  The membership still equals the networkx oracle."""
+    from ta2_minmod_kg_spark.operators import extract
+    from ta2_minmod_kg_spark.operators.canonicalize import auto_link_edges
+    from ta2_minmod_kg_spark.sources import vocab
+
+    N = 160
+    ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
+    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
+    sites = extract.normalize_sites(parsed, vocab.vocab_dataframes(spark))
+    sites = sites.localCheckpoint(eager=True)
+    system_edges = synthetic.synthesize_system_edges(spark, N, partitions=4)
+    curated = spark.createDataFrame(
+        pd.DataFrame(synthetic.synthesize_curated_edges(N))
+    )
+    n_edges = auto_link_edges(sites).count() + system_edges.count()
+    n_sites = sites.count()
+    if regime == "edges_overflow":
+        threshold = n_edges // 2
+    else:
+        threshold = (n_edges + n_sites) // 2
+        assert n_edges <= threshold < n_sites
+
+    frame_cls = type(sites)
+    orig_limit = frame_cls.limit
+    edge_fetches = []
+
+    def counting_limit(self, num):
+        if num == threshold + 1 and list(self.columns) == ["u", "v"]:
+            edge_fetches.append(num)
+        return orig_limit(self, num)
+
+    monkeypatch.setattr(frame_cls, "limit", counting_limit)
+    got = build_membership(
+        sites, system_edges, curated, driver_finish_threshold=threshold
+    ).toPandas()
+    assert len(edge_fetches) <= 1
+    assert dict(zip(got["site_id"], got["dedup_site_id"])) == _membership_oracle(N)

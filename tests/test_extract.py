@@ -82,8 +82,8 @@ def test_extract_triples_arrow_kernel_exact(spark):
     """r06 O8: extract_triples moved from mapInPandas to an Arrow-native
     mapInArrow kernel.  Assert EXACT multiset equality with the per-row
     single-node emitter over the full corpus — plus the bucket-carrying
-    variant and quarantine behavior (malformed JSON / bad path charset
-    emit nothing, valid rows are unaffected)."""
+    variant and quarantine behavior (malformed JSON / bad path charset /
+    constrained-type reject emit nothing, valid rows are unaffected)."""
     from collections import Counter
 
     ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
@@ -109,12 +109,18 @@ def test_extract_triples_arrow_kernel_exact(spark):
     assert set(tb.columns) == {"subj", "pred", "obj", "site_id", "bucket"}
     assert tb["bucket"].notna().all()
 
-    # quarantine: malformed JSON and a bad path charset emit no triples
+    # quarantine: malformed JSON, a bad path charset and a constrained-type
+    # reject (confidence 1.5 under a clean path) emit no triples
+    site = next(
+        s for s in map(json.loads, raw["content"]) if s.get("deposit_type_candidate")
+    )
+    site["deposit_type_candidate"][0]["confidence"] = 1.5
     poisoned = ingest.unionByName(
         spark.createDataFrame(
             [
                 ("repo", "ok/name.json", "c", "en", "{not json"),
                 ("repo", "bad name!.json", "c", "en", raw["content"].iloc[0]),
+                ("repo", "ok/conf.json", "c", "en", json.dumps(site)),
             ],
             ingest.schema,
         )

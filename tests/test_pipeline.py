@@ -158,11 +158,11 @@ def test_describe_resource_returns_shared_node_once(spark):
 
 
 def test_line_terminator_paths_are_violations(spark, tmp_path):
-    """The filename rule is a full match on both sides of the pipeline:
-    a path ending in a line terminator is a violation, never a document
-    that the JVM filter keeps but the Python kernel drops.  Every
-    document lands in exactly one of sites_rel / violations, and a
-    rejected document emits no triples."""
+    """One validity rule for every document kernel: a path ending in a
+    line terminator is a violation, and so is a clean-path document that
+    fails a constrained-type rule — never a document that one kernel keeps
+    and another drops.  Every document lands in exactly one of
+    sites_rel / violations, and a rejected document emits no triples."""
     from ta2_minmod_kg_spark.operators.constrained import (
         structural_then_constrained_parsed,
     )
@@ -170,11 +170,18 @@ def test_line_terminator_paths_are_violations(spark, tmp_path):
     paths = ["a/b.json", "a/b.json\r", "a/b.json\u2028", "a/b.json\r\n", "a/b.json\n"]
     contents = []
     n = 0
-    while len(contents) < len(paths):
-        c = json.dumps(synthetic.make_record(n, 50))
-        if structural_then_constrained_parsed(c)[0] is None:
-            contents.append(c)
+    while len(contents) < len(paths) + 1:
+        rec = synthetic.make_record(n, 50)
         n += 1
+        if structural_then_constrained_parsed(json.dumps(rec))[0] is not None:
+            continue
+        if len(contents) == len(paths):
+            if not rec.get("deposit_type_candidate"):
+                continue
+            rec["deposit_type_candidate"][0]["confidence"] = 1.5
+        contents.append(json.dumps(rec))
+    bad_conf = "deposit_type_candidate[0].confidence"
+    paths.append("a/c.json")
     ingest = spark.createDataFrame(
         [("repo", p, "c", "json", c) for p, c in zip(paths, contents)],
         "repo string, path string, commit string, lang string, content string",
@@ -189,7 +196,10 @@ def test_line_terminator_paths_are_violations(spark, tmp_path):
     rejected = [r["path"] for r in bad]
     assert sorted(kept) == ["a/b.json"]
     assert sorted(rejected) == sorted(paths[1:])
-    assert {r["violation_reason"] for r in bad} == {"structural"}
+    assert {r["path"]: r["violation_reason"] for r in bad} == {
+        **{p: "structural" for p in paths[1:-1]},
+        "a/c.json": bad_conf,
+    }
     triple_sites = {
         r["site_id"] for r in out["triples"].select("site_id").distinct().collect()
     }
