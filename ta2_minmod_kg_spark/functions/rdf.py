@@ -83,6 +83,17 @@ def escape_literal(s: str) -> str:
     return s.translate(_ESCAPE_TABLE)
 
 
+_UNESCAPES = {v[1]: k for k, v in _ESCAPES.items()}
+_ESCAPED_RE = re.compile(r"\\(.)")
+
+
+def unescape_literal(s: str) -> str:
+    """Inverse of ``escape_literal``: one left-to-right pass.  Sequential
+    str.replace in any order corrupts literals containing backslashes
+    (e.g. written '\\\\n' reads back as backslash+newline)."""
+    return _ESCAPED_RE.sub(lambda m: _UNESCAPES.get(m.group(1), m.group(1)), s)
+
+
 def lit_str(v) -> str:
     return f'"{escape_literal(str(v))}"'
 

@@ -29,6 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# star rounds before giving up on a fixpoint (O(log² n) needed; < ~8 seen)
+MAX_STAR_ROUNDS = 30
+
 
 def _nbrs_both_dirs(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -151,12 +154,7 @@ def probe_edges(edges: DataFrame, driver_finish_threshold: int):
     return raw, (pairs if len(pairs) <= driver_finish_threshold else None)
 
 
-def star_rounds(
-    raw: DataFrame,
-    driver_finish_threshold: int,
-    max_iter: int = 30,
-    checkpoint_every: int = 1,
-) -> DataFrame:
+def star_rounds(raw: DataFrame, driver_finish_threshold: int) -> DataFrame:
     """Distributed CC of ``probe_edges``' raw edges → (node, component).
 
     Alternating large/small-star rounds; once the live edge count drops to
@@ -168,16 +166,14 @@ def star_rounds(
 
     membership = None
     prev_fp = None
-    for it in range(max_iter):
+    for _ in range(MAX_STAR_ROUNDS):
         n_edges = prev_fp[0] if prev_fp else e.count()
         if n_edges <= driver_finish_threshold:
             membership = component_rows(
                 raw.sparkSession, min_label_components(_driver_pairs(e))
             )
             break
-        e2 = _small_star(_large_star(e))
-        if checkpoint_every and it % checkpoint_every == 0:
-            e2 = e2.localCheckpoint(eager=True)
+        e2 = _small_star(_large_star(e)).localCheckpoint(eager=True)
         fp = _fingerprint(e2)
         if fp == prev_fp:
             e = e2
@@ -203,10 +199,7 @@ def star_rounds(
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 30,
-    checkpoint_every: int = 1,
-    driver_finish_threshold: int = 2_000_000,
+    edges: DataFrame, driver_finish_threshold: int = 2_000_000
 ) -> DataFrame:
     """edges(u, v) → membership(node, component) where component = min id.
 
@@ -223,4 +216,4 @@ def connected_components(
     raw, pairs = probe_edges(edges, driver_finish_threshold)
     if pairs is not None:
         return component_rows(raw.sparkSession, min_label_components(pairs))
-    return star_rounds(raw, driver_finish_threshold, max_iter, checkpoint_every)
+    return star_rounds(raw, driver_finish_threshold)

@@ -502,8 +502,9 @@ def select_dedup_inventories(
 ) -> DataFrame:
     """A5: per (group, commodity) pick the authoritative inventory view.
 
-    ``inv_views``: INV_VIEW rows (site_id, commodity, ...).  Sites without
-    inventories still participate in ranking via a left join.
+    ``inv_views``: ``grade_tonnage.GT_VIEW_SCHEMA`` rows (site_id,
+    commodity, ...).  Sites without inventories still participate in
+    ranking via a left join.
     """
     ranked = with_site_score(sites_with_dedup).select(
         "site_id",

@@ -18,8 +18,10 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
                           its (subj, pred, obj) rows; a document that
                           ``document_error`` rejects emits none.
 - ``explode_inventories`` — per-inventory rows feeding the grade-tonnage
-                          aggregate (broadcast join for material-form
-                          conversion).
+                          aggregate: ``_gt_input`` maps each inventory to
+                          the model's fields in Catalyst, with the
+                          material-form conversion looked up in a literal
+                          map.
 
 Scale notes: the only shuffle in this module is the optional repartition at
 write; parsing/minting/fan-out are map-side.  Filters/projections stay on
@@ -32,7 +34,7 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -370,85 +372,89 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
 # -- inventory explode for grade-tonnage --------------------------------------
 
 
-def explode_inventories(sites_rel: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """A2 prep: one row per (site, inventory) with commodity normalized and
-    the validity flag for the grade-tonnage model
-    (ref kgrel/mineral_site.py:71-116).
+def _gt_input(inv: Column, pos: Column, form_conv: Column) -> Column:
+    """One inventory struct → the grade-tonnage model's input fields
+    (``GT_INPUT_COLS`` after ``site_id``; ref kgrel/mineral_site.py:71-116).
 
-    Commodity id + material-form conversion resolve via broadcast joins —
-    never dict lookups in Python.
+    ``commodity`` is NULL when the inventory's commodity is not normalized;
+    callers drop those.  ``valid_gt`` tests the RAW category list, so an
+    inventory whose categories are all unlinked still counts as having
+    one.  ``form_conv[uri]`` (not ``element_at``) is NULL for a missing or
+    NULL key under ANSI mode.
     """
-    form_conv = F.broadcast(
-        vocab["commodity_form"].select(
-            F.concat(F.lit(MR_NS), F.col("minmod_id")).alias("form_uri"),
-            F.col("conversion").cast("double").alias("material_form_conversion"),
-        )
+    cats = F.coalesce(inv["category"], F.array())
+    ore_unit = inv["ore"]["unit"]["normalized_uri"]
+    grade_unit = inv["grade"]["unit"]["normalized_uri"]
+    return F.struct(
+        pos.alias("inv_pos"),
+        F.replace(
+            inv["commodity"]["normalized_uri"], F.lit(MR_NS), F.lit("")
+        ).alias("commodity"),
+        inv["date"].alias("date"),
+        inv["zone"].alias("zone"),
+        F.transform(
+            F.filter(cats, lambda c: c["normalized_uri"].isNotNull()),
+            lambda c: c["normalized_uri"],
+        ).alias("category"),
+        form_conv[inv["material_form"]["normalized_uri"]].alias(
+            "material_form_conversion"
+        ),
+        inv["ore"]["value"].alias("ore_value"),
+        ore_unit.alias("ore_unit"),
+        inv["grade"]["value"].alias("grade_value"),
+        grade_unit.alias("grade_unit"),
+        (
+            inv["ore"]["value"].isNotNull()
+            & ore_unit.isNotNull()
+            & inv["grade"]["value"].isNotNull()
+            & grade_unit.isNotNull()
+            & (F.size(cats) > 0)
+        ).alias("valid_gt"),
     )
 
-    inv = (
+
+def explode_inventories(sites_rel: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
+    """A2 prep: one ``GT_INPUT_COLS`` row per (site, inventory) whose
+    commodity is normalized, mapped by ``_gt_input``.
+
+    The result carries an ``_exploded_from`` marker: the same mapping as
+    one ``(site_id, invs)`` row per site, built with ``transform`` over
+    the site's own ``inventories`` array.  ``grade_tonnage_view`` runs on
+    it with no shuffle, because all inventories of a site already live in
+    one sites_rel row.
+
+    The material-form conversion is a lookup in a literal map: the
+    commodity_form vocabulary is broadcast-dim sized, so it collapses to
+    a driver dict like normalize_sites' crs/source-score lookups.
+    """
+    conv = {
+        MR_NS + r["minmod_id"]: (
+            float(r["conversion"]) if r["conversion"] is not None else None
+        )
+        for r in vocab["commodity_form"].collect()
+    }
+    form_conv = F.create_map(
+        *[F.lit(x) for kv in conv.items() for x in kv]
+    ).cast("map<string,double>")
+    out = (
         sites_rel.select(
             "site_id",
             F.posexplode_outer("inventories").alias("inv_pos", "inv"),
         )
-        .filter(F.col("inv.commodity.normalized_uri").isNotNull())
         .select(
             "site_id",
-            "inv_pos",
-            F.replace(
-                F.col("inv.commodity.normalized_uri"), F.lit(MR_NS), F.lit("")
-            ).alias("commodity"),
-            F.col("inv.date").alias("date"),
-            F.col("inv.zone").alias("zone"),
-            F.transform(
-                F.filter(
-                    F.coalesce(F.col("inv.category"), F.array()),
-                    lambda c: c["normalized_uri"].isNotNull(),
-                ),
-                lambda c: c["normalized_uri"],
-            ).alias("category"),
-            F.col("inv.material_form.normalized_uri").alias("form_uri"),
-            F.col("inv.ore.value").alias("ore_value"),
-            F.col("inv.ore.unit.normalized_uri").alias("ore_unit"),
-            F.col("inv.grade.value").alias("grade_value"),
-            F.col("inv.grade.unit.normalized_uri").alias("grade_unit"),
-            (
-                F.col("inv.ore.value").isNotNull()
-                & F.col("inv.ore.unit.normalized_uri").isNotNull()
-                & F.col("inv.grade.value").isNotNull()
-                & F.col("inv.grade.unit.normalized_uri").isNotNull()
-                & (F.size(F.coalesce(F.col("inv.category"), F.array())) > 0)
-            ).alias("valid_gt"),
+            _gt_input(F.col("inv"), F.col("inv_pos"), form_conv).alias("gt"),
         )
-        .join(form_conv, "form_uri", "left")
+        .select("site_id", "gt.*")
+        .filter(F.col("commodity").isNotNull())
     )
-    out = inv.select(
+    out._exploded_from = sites_rel.select(  # type: ignore[attr-defined]
         "site_id",
-        "inv_pos",
-        "commodity",
-        "date",
-        "zone",
-        "category",
-        "material_form_conversion",
-        "ore_value",
-        "ore_unit",
-        "grade_value",
-        "grade_unit",
-        "valid_gt",
-    )
-    # r06: mark the exploded view with its source so grade_tonnage_view
-    # can skip the explode→groupBy round trip — all inventories of a site
-    # already live in ONE sites_rel row, so regrouping them by
-    # (site_id, commodity) shuffles data that never needed to move
-    # (optimization-guide §8: the engine knows the grouping the optimizer
-    # cannot see).  The form-conversion vocabulary collapses to a closure
-    # dict exactly like normalize_sites' crs/source-score dicts.
-    out._exploded_from = (  # type: ignore[attr-defined]
-        sites_rel,
-        {
-            MR_NS + r["minmod_id"]: (
-                float(r["conversion"]) if r["conversion"] is not None else None
-            )
-            for r in vocab["commodity_form"].collect()
-        },
+        F.filter(
+            F.transform(
+                "inventories", lambda inv, i: _gt_input(inv, i, form_conv)
+            ),
+            lambda g: g["commodity"].isNotNull(),
+        ).alias("invs"),
     )
     return out

@@ -25,13 +25,14 @@ Clean-room reimplementation of
 `/root/reference/minmodkg/grade_tonnage_model.py:225-459` (semantics only;
 the inner algebra is a per-group closure that no SQL aggregate expresses).
 
-Spark execution: the pipeline explodes inventories into one row per
-``(site_id, commodity, inventory)`` and runs this model via
-``groupBy(site_id, commodity).applyInPandas`` — Arrow-vectorized, one
-shuffle, partial data never leaves the executor.  Groups are tiny (a site
-reports a handful of inventories per commodity) so there is no skew risk on
-this key even at 10^12 input rows; the heavy key for skew is the *dedup
-group*, handled in operators/dedup.py.
+Spark execution: ``extract._gt_input`` maps each inventory to the model's
+input fields in Catalyst; one Arrow-batched Python kernel receives a site's
+mapped inventories as one row, splits them by commodity and runs the model.
+The pipeline's input comes straight from the site's ``inventories`` array,
+so the view needs no shuffle; pre-exploded rows are regrouped by
+``site_id`` first.  Groups are tiny (a site reports a handful of
+inventories per commodity) so there is no skew risk; the heavy key for skew
+is the *dedup group*, handled in operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -279,7 +280,8 @@ GT_VIEW_SCHEMA = (
     "tonnage double, grade double, date string"
 )
 
-# input columns expected by gt_apply_in_pandas (one row per inventory)
+# explode_inventories' columns (one row per inventory); inv_pos leads the
+# fields after site_id so array_sort restores document order
 GT_INPUT_COLS = [
     "site_id",
     "inv_pos",
@@ -339,31 +341,6 @@ def _gt_output_row(site_id, commodity, invs: list[dict]) -> dict:
     }
 
 
-def _gt_batch_fn(batches):
-    """mapInPandas kernel over pre-grouped rows (one row = one group).
-
-    Groups here are tiny (a handful of inventories), so per-group
-    ``applyInPandas`` would pay a pandas-DataFrame construction per group —
-    ~20 ms × millions of groups.  Grouping JVM-side with ``collect_list``
-    and draining whole Arrow batches through one Python call is ~50×
-    faster and shuffles the same bytes.
-    """
-    from ..functions.arrowkit import chunked_kernel
-
-    def per_chunk(pdf):
-        cols: dict[str, list] = {c: [] for c in _GT_OUT_COLS}
-        for site_id, commodity, invs in zip(
-            pdf["site_id"], pdf["commodity"], pdf["invs"]
-        ):
-            row = _gt_output_row(site_id, commodity, invs)
-            for c in _GT_OUT_COLS:
-                cols[c].append(row[c])
-        return pd.DataFrame(cols, columns=_GT_OUT_COLS)
-
-    # bounded chunks + paused cyclic GC — see functions/arrowkit.py
-    yield from chunked_kernel(per_chunk)(batches)
-
-
 _GT_OUT_COLS = [
     "site_id",
     "commodity",
@@ -374,79 +351,34 @@ _GT_OUT_COLS = [
 ]
 
 
-def _gt_fused_batch_fn(form_conv: dict):
-    """Zero-shuffle GT kernel over sites_rel rows (r06).
+def _gt_kernel(batches):
+    """Python kernel over ``(site_id, invs)`` rows, one row per site.
 
-    Every inventory of a site lives in that site's single ``inventories``
-    array, so the per-(site, commodity) grouping the model needs is free:
-    bucket within the row (dict preserves doc order — the model's
-    later-wins tie-break is order-sensitive), restate explode_inventories'
-    field semantics, run the model.  Byte-equivalent to the
-    explode→groupBy path (tests/test_grade_tonnage.py parity test)."""
+    ``invs`` holds the site's mapped inventories (``GT_INPUT_COLS`` after
+    ``site_id``) in document order.  They are split by commodity keeping
+    that order (the model's later-wins tie-break is order-sensitive), and
+    each (site, commodity) group becomes one view row.  Groups are tiny,
+    so one Python call drains a whole Arrow batch instead of paying a
+    pandas-DataFrame construction per group as ``applyInPandas`` would.
+    """
+    from ..functions.arrowkit import chunked_kernel
 
     def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         cols: dict[str, list] = {c: [] for c in _GT_OUT_COLS}
-        for site_id, inventories in zip(pdf["site_id"], pdf["inventories"]):
-            if inventories is None or len(inventories) == 0:
+        for site_id, invs in zip(pdf["site_id"], pdf["invs"]):
+            if invs is None:
                 continue
             comm2invs: dict[str, list[dict]] = {}
-            for inv in inventories:
-                if inv is None:
-                    continue
-                ce = inv.get("commodity")
-                nu = ce.get("normalized_uri") if ce is not None else None
-                if nu is None:
-                    continue
-                commodity = nu.replace(MR, "")
-                cat_raw = inv.get("category")
-                has_cat = cat_raw is not None and len(cat_raw) > 0
-                cats = [
-                    c["normalized_uri"]
-                    for c in (cat_raw if has_cat else [])
-                    if c is not None and c.get("normalized_uri") is not None
-                ]
-                ore = inv.get("ore") or {}
-                grade = inv.get("grade") or {}
-                ore_value = ore.get("value")
-                ore_unit = (ore.get("unit") or {}).get("normalized_uri")
-                grade_value = grade.get("value")
-                grade_unit = (grade.get("unit") or {}).get("normalized_uri")
-                mf = inv.get("material_form")
-                form_uri = mf.get("normalized_uri") if mf is not None else None
-                comm2invs.setdefault(commodity, []).append(
-                    {
-                        "date": inv.get("date"),
-                        "zone": inv.get("zone"),
-                        "category": cats,
-                        "material_form_conversion": (
-                            form_conv.get(form_uri)
-                            if form_uri is not None
-                            else None
-                        ),
-                        "ore_value": ore_value,
-                        "ore_unit": ore_unit,
-                        "grade_value": grade_value,
-                        "grade_unit": grade_unit,
-                        # valid_gt checks the RAW category list (unlinked
-                        # entries count), matching explode_inventories
-                        "valid_gt": (
-                            ore_value is not None
-                            and ore_unit is not None
-                            and grade_value is not None
-                            and grade_unit is not None
-                            and has_cat
-                        ),
-                    }
-                )
-            for commodity, invs in comm2invs.items():
-                row = _gt_output_row(site_id, commodity, invs)
+            for inv in invs:
+                comm2invs.setdefault(inv["commodity"], []).append(inv)
+            for commodity, cinvs in comm2invs.items():
+                row = _gt_output_row(site_id, commodity, cinvs)
                 for c in _GT_OUT_COLS:
                     cols[c].append(row[c])
         return pd.DataFrame(cols, columns=_GT_OUT_COLS)
 
-    from ..functions.arrowkit import chunked_kernel
-
-    return chunked_kernel(per_chunk)
+    # bounded chunks + paused cyclic GC — see functions/arrowkit.py
+    yield from chunked_kernel(per_chunk)(batches)
 
 
 def grade_tonnage_view(inv_rows):
@@ -458,47 +390,24 @@ def grade_tonnage_view(inv_rows):
 
     When ``inv_rows`` is the direct output of
     ``extract.explode_inventories`` (it carries the ``_exploded_from``
-    marker), the view is computed with a ZERO-shuffle fused kernel over
-    the sites table instead: the explode→groupBy(site, commodity) round
-    trip regroups inventories that already sit together in one sites_rel
-    row, so the shuffle (and the collect_list of nested structs riding
-    it) is pure waste — guide §2.4, remove shuffles outright.
+    marker), the kernel runs over the marker's per-site frame with no
+    shuffle: all inventories of a site already sit in one sites_rel row.
 
-    Fallback path (pre-exploded rows from storage, tests): one shuffle on
-    (site_id, commodity) via a JVM ``collect_list`` aggregate (map-side
-    partials), then an Arrow batch kernel.
-
-    ``collect_list`` element order is NOT guaranteed after a shuffle, but
-    the model's best-estimate tie-break is order-sensitive (later-wins on
-    exact contained-metal ties, matching the reference's cmp_to_key quirk) —
-    so the collected structs lead with ``inv_pos`` and are ``array_sort``ed
-    back into the reference's document order before the kernel runs.
+    Other input (pre-exploded rows from storage, tests) is grouped by
+    ``site_id`` first — one shuffle.  ``collect_list`` element order is
+    NOT guaranteed after a shuffle, but the model's best-estimate
+    tie-break is order-sensitive (later-wins on exact contained-metal
+    ties, matching the reference's cmp_to_key quirk) — so the collected
+    structs lead with ``inv_pos`` and are ``array_sort``ed back into the
+    reference's document order before the kernel runs.
     """
     from pyspark.sql import functions as F
 
-    src = getattr(inv_rows, "_exploded_from", None)
-    if src is not None:
-        sites_rel, form_conv = src
-        return sites_rel.select("site_id", "inventories").mapInPandas(
-            _gt_fused_batch_fn(form_conv), schema=GT_VIEW_SCHEMA
-        )
-
-    grouped = inv_rows.groupBy("site_id", "commodity").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "inv_pos",  # first struct field ⇒ array_sort = doc order
-                    "date",
-                    "zone",
-                    "category",
-                    "material_form_conversion",
-                    "ore_value",
-                    "ore_unit",
-                    "grade_value",
-                    "grade_unit",
-                    "valid_gt",
-                )
+    per_site = getattr(inv_rows, "_exploded_from", None)
+    if per_site is None:
+        per_site = inv_rows.groupBy("site_id").agg(
+            F.array_sort(F.collect_list(F.struct(*GT_INPUT_COLS[1:]))).alias(
+                "invs"
             )
-        ).alias("invs")
-    )
-    return grouped.mapInPandas(_gt_batch_fn, schema=GT_VIEW_SCHEMA)
+        )
+    return per_site.mapInPandas(_gt_kernel, schema=GT_VIEW_SCHEMA)

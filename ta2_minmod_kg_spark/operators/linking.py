@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.rdf import unescape_literal
 from ..functions.strsim import extract_features
 
 LINKED_SCHEMA = StructType(
@@ -157,25 +158,9 @@ def unlinked_mentions(sites_rel: DataFrame, kind: str) -> DataFrame:
 
 # -- S5: vocabulary TTL scan (ref entity_linking.py:31-58) ---------------------
 
-_TTL_LINE_RE = None  # compiled lazily inside the kernel closure
-
 RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
 SKOS_ALT_LABEL = "http://www.w3.org/2004/02/skos/core#altLabel"
 MO_ALIASES = "https://minmod.isi.edu/ontology/aliases"
-
-_TTL_ESC_MAP = {"n": "\n", "r": "\r", "t": "\t", '"': '"', "\\": "\\"}
-
-
-def _ttl_unescape(lex: str) -> str:
-    """Single left-to-right unescape pass.  Sequential str.replace in any
-    order corrupts literals containing backslashes (e.g. written '\\\\n'
-    reads back as backslash+newline)."""
-    import re
-
-    return re.sub(
-        r"\\(.)", lambda m: _TTL_ESC_MAP.get(m.group(1), m.group(1)), lex
-    )
-
 
 def _read_prefixes(spark, path: str) -> dict[str, str]:
     """@prefix lines (inline or the engine's sibling _prefixes.ttl)."""
@@ -243,7 +228,7 @@ def read_ttl_triples(spark, path: str) -> DataFrame:
                 if c == '"':
                     break
                 i += 1
-            return None, _ttl_unescape(o[1:i])
+            return None, unescape_literal(o[1:i])
         return expand(o), None
 
     def fn(batches):

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rdf import format_nanoseconds
-from ..operators.dedup import DEFAULT_SOURCE_SCORE, SYSTEM_PREFIX
 
 # -- makedict equivalents (ref misc/utils.py makedict) -------------------------
 
@@ -154,17 +153,16 @@ def _inventory(inv: dict):
 
 
 def _site_score(row: dict) -> dict:
-    """SiteScore.to_dict (`custom_types/site_and_score.py:32-36,79-92`)."""
-    is_expert = not row["created_by"].startswith(SYSTEM_PREFIX)
-    if is_expert:
-        return {"score": 1.0, "suborder": [True, row["modified_at"]]}
-    score = row.get("source_score")
-    if score is None or score < 0:
-        score = DEFAULT_SOURCE_SCORE
-    return {
-        "score": min(score, 0.99),
-        "suborder": [False, row["source_id"], row["record_id"], row["modified_at"]],
-    }
+    """SiteScore.to_dict (`custom_types/site_and_score.py:32-36,79-92`).
+
+    ``score`` and ``is_expert`` are the ranked-site fields the merge wrote
+    (``dedup.with_site_score``), so the export shows the score the site
+    was ranked with."""
+    if row["is_expert"]:
+        suborder = [True, row["modified_at"]]
+    else:
+        suborder = [False, row["source_id"], row["record_id"], row["modified_at"]]
+    return {"score": row["score"], "suborder": suborder}
 
 
 def ms_to_dict(row: dict) -> dict:
@@ -298,8 +296,9 @@ def _ref_geology(geojson: Optional[str]) -> dict:
 def dedup_to_dict(row: dict, ranked_meta: list[dict]) -> dict:
     """kgrel DedupMineralSite.to_dict (`dedup_mineral_site.py:385-419`).
 
-    ``ranked_meta``: per ranked site (in rank order) the score-metadata
-    fields (created_by, source_id, record_id, modified_at, source_score).
+    ``ranked_meta``: per ranked site (in rank order) its ranked score and
+    expert flag plus the suborder fields (source_id, record_id,
+    modified_at).
     """
     coords = row.get("coordinates")
     dy = row.get("discovered_year")
@@ -386,24 +385,23 @@ def mineral_site_json_rows(sites_rel: DataFrame) -> DataFrame:
 
 def dedup_site_json_rows(dedup_attrs: DataFrame, sites_rel: DataFrame) -> DataFrame:
     """DedupMineralSite section: ranked-site score metadata re-joined in
-    rank order (two shuffles, partial-aggregated)."""
-    meta = sites_rel.select(
-        "site_id", "created_by", "source_id", "record_id", "modified_at",
-        "source_score",
-    )
+    rank order (two shuffles, partial-aggregated).  Score and expert flag
+    come from ``ranked_sites``; ``sites_rel`` supplies only the suborder
+    fields."""
+    meta = sites_rel.select("site_id", "source_id", "record_id", "modified_at")
     ex = (
         dedup_attrs.select(
             "dedup_site_id", F.posexplode("ranked_sites").alias("pos", "rs")
         )
-        .select("dedup_site_id", "pos", F.col("rs.site_id").alias("site_id"))
+        .select("dedup_site_id", "pos", "rs.*")
         .join(meta, "site_id")
     )
     regrouped = ex.groupBy("dedup_site_id").agg(
         F.array_sort(
             F.collect_list(
                 F.struct(
-                    "pos", "site_id", "created_by", "source_id", "record_id",
-                    "modified_at", "source_score",
+                    "pos", "site_id", "score", "is_expert", "source_id",
+                    "record_id", "modified_at",
                 )
             )
         ).alias("ranked_meta")

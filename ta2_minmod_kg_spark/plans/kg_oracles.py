@@ -773,7 +773,7 @@ def _gt_inventory_groups(
     synthetic records by plain dict traversal (no Spark, no
     operators/extract.py) — the shared input of the grade-tonnage and CDR
     oracles.  Restates explode_inventories' field mapping
-    (`operators/extract.py:489-553` semantics: commodity must be
+    (`operators/extract._gt_input` semantics: commodity must be
     normalized; ``valid_gt`` checks ore/grade value+unit and a non-empty
     RAW category list; category URIs keep only normalized entries;
     material-form conversion resolves via the commodity_form vocabulary).
@@ -886,7 +886,7 @@ def kg_grade_tonnage_oracle_sql(n_sites: int) -> str:
 
     Independence: zero engine code touches the expected values — the
     traversal restates explode_inventories' field mapping
-    (`operators/extract.py:489-553` semantics: commodity must be
+    (`operators/extract._gt_input` semantics: commodity must be
     normalized; ``valid_gt`` checks ore/grade value+unit and a non-empty
     RAW category list; category URIs keep only normalized entries;
     material-form conversion resolves via the commodity_form vocabulary)

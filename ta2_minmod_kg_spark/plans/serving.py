@@ -213,12 +213,9 @@ def lod_closure(triples: DataFrame, subj: str, max_iters: int = 64) -> DataFrame
 
 # -- Q4b: LOD entity JSON tree (ref api/routers/lod.py:207-257) ---------------
 
-_LIT_RE = None
-
-
 def _parse_term(term: str):
     """N3 text term → ('uri', full_uri) | ('lit', python_value)."""
-    from ..functions.rdf import PREFIXES
+    from ..functions.rdf import PREFIXES, unescape_literal
 
     if term.startswith("<") and term.endswith(">"):
         return "uri", term[1:-1]
@@ -234,16 +231,7 @@ def _parse_term(term: str):
                 q = term.rfind('"')
                 body = term[1:q] if q > 0 else term[1:]
                 dt = None  # @lang or malformed tail → plain string
-        # reverse of functions/rdf.py _ESCAPES (single-pass)
-        import re
-
-        body = re.sub(
-            r"\\(.)",
-            lambda m: {"n": "\n", "r": "\r", "t": "\t", '"': '"', "\\": "\\"}.get(
-                m.group(1), m.group(1)
-            ),
-            body,
-        )
+        body = unescape_literal(body)
         if dt == "xsd:integer":
             return "lit", int(body)
         if dt == "xsd:decimal":

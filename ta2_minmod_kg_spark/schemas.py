@@ -189,28 +189,8 @@ SITE_REL = StructType(
     ]
 )
 
-# -- inventory views (ref: kgrel/views/mineral_inventory_view.py) ------------
-INV_VIEW = StructType(
-    [
-        _s("site_id", StringType(), False),
-        _s("commodity", StringType(), False),
-        _s("contained_metal", DoubleType()),
-        _s("tonnage", DoubleType()),
-        _s("grade", DoubleType()),
-        _s("date", StringType()),
-    ]
-)
-
 # -- same-as edges ------------------------------------------------------------
 EDGE = StructType([_s("ms_1", StringType(), False), _s("ms_2", StringType(), False)])
-CURATED_EDGE = StructType(
-    [
-        _s("ms_1", StringType(), False),
-        _s("ms_2", StringType(), False),
-        _s("time_ns", LongType(), False),
-        _s("is_same", IntegerType(), False),
-    ]
-)
 
 # -- event log (ref: kgrel/event.py:13-21) ------------------------------------
 EVENT_LOG = StructType(

@@ -48,7 +48,7 @@ def test_cc_random_graph(spark, threshold):
 def test_cc_deep_chain(spark, threshold):
     # a 400-node chain: naive label propagation would need 400 rounds;
     # large/small-star (threshold=0 forces the distributed path) must
-    # converge within the max_iter budget
+    # converge within MAX_STAR_ROUNDS
     edges = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(400)]
     got = _spark_cc(spark, edges, threshold)
     assert set(got.values()) == {"c0000"}

@@ -1,6 +1,7 @@
 """Dead-code guard: every module-level function or class of the package is
 referenced by name somewhere — in the package itself, the benchmark
-(``perfbench/``), the tests, the bench scripts or the two entry points.
+(``perfbench/``), the tests, the bench scripts or the two entry points —
+and every module-level constant is read somewhere there.
 
 A definition's references inside its own body (recursion) do not count.
 References are AST names, attribute names and imported names, so an
@@ -42,26 +43,29 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(f.read(), filename=path)
 
 
-def _referenced_names() -> collections.Counter:
-    refs: collections.Counter = collections.Counter()
+def _referrer_files():
     for rel in REFERRERS:
         path = os.path.join(ROOT, rel)
-        if not os.path.exists(path):
-            continue
-        for f in _py_files(path):
-            for top in _parse(f).body:
-                own = top.name if isinstance(top, DEFS) else None
-                for n in ast.walk(top):
-                    if isinstance(n, ast.Name):
-                        name = n.id
-                    elif isinstance(n, ast.Attribute):
-                        name = n.attr
-                    elif isinstance(n, ast.alias):
-                        name = n.name.rsplit(".", 1)[-1]
-                    else:
-                        continue
-                    if name != own:
-                        refs[name] += 1
+        if os.path.exists(path):
+            yield from _py_files(path)
+
+
+def _referenced_names() -> collections.Counter:
+    refs: collections.Counter = collections.Counter()
+    for f in _referrer_files():
+        for top in _parse(f).body:
+            own = top.name if isinstance(top, DEFS) else None
+            for n in ast.walk(top):
+                if isinstance(n, ast.Name):
+                    name = n.id
+                elif isinstance(n, ast.Attribute):
+                    name = n.attr
+                elif isinstance(n, ast.alias):
+                    name = n.name.rsplit(".", 1)[-1]
+                else:
+                    continue
+                if name != own:
+                    refs[name] += 1
     return refs
 
 
@@ -74,3 +78,38 @@ def test_every_package_definition_is_referenced():
         if isinstance(top, DEFS) and not refs[top.name]
     ]
     assert not dead, "definitions nothing references:\n" + "\n".join(dead)
+
+
+def _loaded_names() -> collections.Counter:
+    refs: collections.Counter = collections.Counter()
+    for f in _referrer_files():
+        for n in ast.walk(_parse(f)):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                refs[n.id] += 1
+            elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+                refs[n.attr] += 1
+    return refs
+
+
+def test_every_package_constant_is_referenced():
+    """Every module-level assignment of the package is read somewhere: a
+    name that is only stored (or only imported) is dead."""
+    refs = _loaded_names()
+    dead = []
+    for f in _py_files(PKG):
+        for top in _parse(f).body:
+            if isinstance(top, ast.Assign):
+                targets = top.targets
+            elif isinstance(top, ast.AnnAssign):
+                targets = [top.target]
+            else:
+                continue
+            for t in targets:
+                for n in ast.walk(t):
+                    if (
+                        isinstance(n, ast.Name)
+                        and not n.id.startswith("__")
+                        and not refs[n.id]
+                    ):
+                        dead.append(f"{os.path.relpath(f, ROOT)}:{top.lineno} {n.id}")
+    assert not dead, "constants nothing reads:\n" + "\n".join(dead)

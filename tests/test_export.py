@@ -25,15 +25,12 @@ from ta2_minmod_kg_spark.plans.export import (
     _inventory,
     _reference,
     _cand,
+    dedup_site_json_rows,
     dedup_sites_json,
 )
-from ta2_minmod_kg_spark.sources import vocab
+from ta2_minmod_kg_spark.sources import synthetic, vocab
 
 FIXTURE_DIR = Path("/root/reference/tests/resources/kgdata/mineral-sites/json")
-
-pytestmark = pytest.mark.skipif(
-    not FIXTURE_DIR.exists(), reason="reference fixtures not available"
-)
 
 
 def _load_records():
@@ -51,6 +48,8 @@ def _load_records():
 
 @pytest.fixture(scope="module")
 def exported(spark):
+    if not FIXTURE_DIR.exists():
+        pytest.skip("reference fixtures not available")
     recs = _load_records()
     rows = [
         {
@@ -151,6 +150,43 @@ def test_dedup_rows_shape(exported):
         for dt in d.get("deposit_types", []):
             assert set(dt) == {"value", "refid"}
             assert set(dt["value"]) == {"id", "source", "confidence"}
+
+
+def test_dedup_site_score_is_the_ranked_score(spark):
+    """A system site whose source score is NaN is ranked with the 0.5
+    default (dedup.with_site_score); the DedupMineralSite JSON must show
+    that same score, not a NaN recomputed from the raw source score."""
+    from pyspark.sql import functions as F
+
+    ingest = synthetic.synthesize_ingest(spark, 12, partitions=2)
+    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
+    sites = extract.normalize_sites(parsed, vocab.vocab_dataframes(spark))
+    sites = sites.withColumn("source_score", F.lit(float("nan"))).persist()
+    membership = canonicalize.build_membership(sites, None, None)
+    swd = sites.drop("dedup_site_id").join(membership, "site_id")
+    dedup_sites = dedup.merge_dedup_sites(swd).persist()
+
+    ranked = {
+        (r["dedup_site_id"], rs["site_id"]): (rs["score"], rs["is_expert"])
+        for r in dedup_sites.collect()
+        for rs in r["ranked_sites"]
+    }
+    got = {
+        (d["id"], rs["site_id"]): rs["score"]["score"]
+        for d in (
+            json.loads(r["json"])
+            for r in dedup_site_json_rows(dedup_sites, sites).collect()
+        )
+        for rs in d["ranked_sites"]
+    }
+    assert set(got) == set(ranked)
+    assert any(not is_expert for _, is_expert in ranked.values())
+    for key, (score, is_expert) in ranked.items():
+        assert got[key] == score
+        if not is_expert:
+            assert got[key] == 0.5
+    dedup_sites.unpersist()
+    sites.unpersist()
 
 
 def test_inventory_view_rows(exported):

@@ -217,15 +217,37 @@ def test_view_doc_order_tiebreak(spark):
         assert out["contained_metal"].iloc[0] == 0.1
 
 
+def _plan_node_names(df) -> list[str]:
+    """Node names of ``df``'s executed physical plan, looking through
+    adaptive query stages; a cached input counts as its scan only."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        names.append(name)
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        else:
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
 def test_fused_gt_view_matches_exploded_path(spark):
     """r06: grade_tonnage_view computes zero-shuffle from sites_rel when
-    handed the marked explode_inventories output.  The fused kernel must
+    handed the marked explode_inventories output.  The marked path must
     be value-identical (incl. NULL rows for invalid-only commodities) to
-    the explode→groupBy path on the full synthetic corpus."""
+    the explode→groupBy path on the full synthetic corpus, and run as one
+    Python pass with no Exchange."""
     import pandas as pd
 
     from ta2_minmod_kg_spark.operators import extract
-    from ta2_minmod_kg_spark.operators.grade_tonnage import grade_tonnage_view
+    from ta2_minmod_kg_spark.operators.grade_tonnage import (
+        GT_INPUT_COLS,
+        grade_tonnage_view,
+    )
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     ingest = synthetic.synthesize_ingest(spark, 400, partitions=8)
@@ -235,11 +257,21 @@ def test_fused_gt_view_matches_exploded_path(spark):
 
     inv = extract.explode_inventories(sites, vdfs)
     assert hasattr(inv, "_exploded_from")
-    fused = grade_tonnage_view(inv).toPandas()
+    assert inv.columns == GT_INPUT_COLS
+    fused_df = grade_tonnage_view(inv)
+    fused = fused_df.toPandas()
+    nodes = _plan_node_names(fused_df)
+    assert nodes.count("MapInPandas") == 1, nodes
+    assert not any("Exchange" in n for n in nodes), nodes
 
     inv_plain = inv.select(*inv.columns)  # strips the marker
     assert not hasattr(inv_plain, "_exploded_from")
-    unfused = grade_tonnage_view(inv_plain).toPandas()
+    unfused_df = grade_tonnage_view(inv_plain)
+    unfused = unfused_df.toPandas()
+    # the probe sees a shuffle where there is one
+    nodes = _plan_node_names(unfused_df)
+    assert nodes.count("MapInPandas") == 1, nodes
+    assert any("Exchange" in n for n in nodes), nodes
 
     key = ["site_id", "commodity"]
     fused = fused.sort_values(key).reset_index(drop=True)

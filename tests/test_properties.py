@@ -212,7 +212,6 @@ def test_constrained_fuzz_parity_vs_executed_reference(rec_i, path, value):
 def test_ttl_literal_escape_roundtrip_fuzz(s):
     """escape_literal → single-pass unescape is the identity for ANY
     string (the round-2 sequential-replace bug class, fuzzed)."""
-    from ta2_minmod_kg_spark.functions.rdf import escape_literal
-    from ta2_minmod_kg_spark.operators.linking import _ttl_unescape
+    from ta2_minmod_kg_spark.functions.rdf import escape_literal, unescape_literal
 
-    assert _ttl_unescape(escape_literal(s)) == s
+    assert unescape_literal(escape_literal(s)) == s
